@@ -2144,7 +2144,7 @@ def _q_mm_tile_caption(spark, sf_dir):
         from the generation recipe (datagen._WS/_HS, lossy every 10th, real PNG every (10k+4)th);
       * tile — min-corner cell of a deterministic id-derived footprint
         (modular arithmetic, same family as part_boxes) through the
-        engine's axis_index_col — gates the tiling arithmetic;
+        engine's axis_index_sql — gates the tiling arithmetic;
       * caption — the full caption recipe (color/noun cycles + %%.3f
         coordinates) rebuilt by format_string on the id-derived coords —
         gates string formatting parity bit-for-bit;
@@ -2154,15 +2154,15 @@ def _q_mm_tile_caption(spark, sf_dir):
 
     The pixel-decode half (bytes → PSNR / phash) has no SQL twin and
     stays rows-only under mm_phash_verify / mm_codec_roundtrip."""
-    from python_prtree_spark.functions.tiling import axis_index_col
+    from python_prtree_spark.functions.tiling import axis_index_sql, dlit
 
     imgs = image_table(spark, 500)
     side = 1 << CFG.level
     k = F.col("id")
-    sx = ((k * 2654435761) % 100000).cast("double") / 1000.0
-    sy = ((k * 2246822519) % 100000).cast("double") / 1000.0
-    ix = axis_index_col(sx, CFG.extent.xmin, CFG.extent.width(), side)
-    iy = axis_index_col(sy, CFG.extent.ymin, CFG.extent.height(), side)
+    sx = f"CAST((`id` * 2654435761) % 100000 AS DOUBLE) / {dlit(1000.0)}"
+    sy = f"CAST((`id` * 2246822519) % 100000 AS DOUBLE) / {dlit(1000.0)}"
+    ix = F.expr(axis_index_sql(sx, CFG.extent.xmin, CFG.extent.width(), side))
+    iy = F.expr(axis_index_sql(sy, CFG.extent.ymin, CFG.extent.height(), side))
     colors = "red green blue amber violet teal coral slate".split()
     nouns = "fox door river tile crate lantern mosaic orchid".split()
     color = F.array(*[F.lit(c) for c in colors])[(k % 8).cast("int")]
@@ -2172,7 +2172,8 @@ def _q_mm_tile_caption(spark, sf_dir):
         k, color, noun, F.col("xmin"), F.col("ymin"),
     )
     syn_caption = F.format_string(
-        "caption of img%010d: %s %s at (%.3f,%.3f)", k, color, noun, sx, sy,
+        "caption of img%010d: %s %s at (%.3f,%.3f)", k, color, noun,
+        F.expr(sx), F.expr(sy),
     )
     return imgs.select(
         "image_id", "w", "h", "fmt",

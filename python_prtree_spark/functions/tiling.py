@@ -4,19 +4,24 @@ Replaces the reference's single-node pseudo-PRTree kd-partitioning
 (/root/reference/include/prtree/core/detail/pseudo_tree.h:123-225) with a
 deterministic 2^L x 2^L grid over a configured world extent:
 
-  * ``cell_cols`` — pure Spark column expressions (stay in whole-stage
-    codegen) computing the covering cell-index ranges of a box;
-  * ``explode_cells`` — one row per covering cell (F.sequence + explode,
-    still JVM-side);
-  * ``ref_cell_col`` — the *reference-point* cell of a candidate pair: the
+  * SQL-string builders — the only Spark-side source of the grid
+    formulas: ``axis_index_sql`` (clamped grid index along one axis),
+    ``explode_cells`` (one row per covering cell via sequence + explode,
+    JVM-side), ``ref_cell_sql`` and ``morton_sql``. Strings, not nested
+    Column calls, because each Column node costs one py4j round trip and
+    these expressions sit on every operator's plan-construction path; the
+    parsed trees are the same;
+  * ``ref_cell_sql`` — the *reference-point* cell of a candidate pair: the
     cell containing (max(xmin_a, xmin_b), max(ymin_a, ymin_b)), i.e. the
     min-corner of the intersection. Every intersecting pair is reported in
     exactly one cell, so NO post-join dedup shuffle is needed (the
     distributed analogue of the reference's in-memory `i<j` dedup at
-    prtree.h:890-894). This is the PBSM duplicate-avoidance technique.
-  * numpy twins (``cells_np`` etc.) for use inside Arrow UDFs, plus a
-    Morton/Z-order encoder used to lay out the persisted index table for
-    locality (partition pruning on cell ranges).
+    prtree.h:890-894). This is the PBSM duplicate-avoidance technique;
+  * ``morton_sql`` — the Z-order key of a row-major cell id. The index
+    table's ``zorder`` column and the store's bucket of a cell both come
+    from it;
+  * numpy ``cell_of_point_np`` for use inside Arrow UDFs, and
+    ``morton_encode``, the numpy reference of ``morton_sql``.
 
 Cells only route rows. The closed-interval AABB predicate is the only
 arbiter of results (reference bounding_box.h:104-123), so clamping
@@ -26,27 +31,24 @@ out-of-extent geometry into border cells is exact.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_prtree_spark.config import EngineConfig, Extent
+from python_prtree_spark.config import Extent
 
 __all__ = [
-    "axis_index_col",
-    "cell_range_cols",
+    "axis_index_sql",
     "explode_cells",
-    "ref_cell_col",
-    "cells_np",
+    "ref_cell_sql",
     "cell_of_point_np",
     "morton_encode",
-    "morton_decode",
-    "morton_col",
+    "morton_sql",
     "hilbert_key_col",
 ]
 
 
 # ---------------------------------------------------------------------------
-# Spark column expressions (JVM-side)
+# Spark SQL expressions (JVM-side)
 # ---------------------------------------------------------------------------
 
 def dlit(x: float) -> str:
@@ -65,34 +67,13 @@ def dlit(x: float) -> str:
 
 
 def axis_index_sql(coord_sql: str, lo: float, size: float, side: int) -> str:
-    """SQL-string twin of ``axis_index_col`` over a raw SQL fragment (same
-    expression tree after parsing — the string form exists because building
-    this tree through the Column API costs dozens of py4j round trips per
-    call and the hot operators construct it for every query). Callers
-    backtick plain column names themselves."""
+    """Grid index of the SQL fragment ``coord_sql`` along one axis, clamped
+    to [0, side-1]. Callers backtick plain column names themselves and
+    pass float literals inside the fragment through ``dlit``."""
     return (
         f"CAST(greatest(0, least({side - 1}, "
         f"FLOOR(({coord_sql} - {dlit(lo)}) / {dlit(size)} * {side}))) AS BIGINT)"
     )
-
-
-def axis_index_col(coord: Column, lo: float, size: float, side: int) -> Column:
-    """Grid index of ``coord`` along one axis, clamped to [0, side-1]."""
-    idx = F.floor((coord - F.lit(lo)) / F.lit(size) * F.lit(side))
-    return F.greatest(F.lit(0), F.least(F.lit(side - 1), idx)).cast("long")
-
-
-def cell_range_cols(
-    xmin: Column, ymin: Column, xmax: Column, ymax: Column,
-    extent: Extent, level: int,
-) -> tuple[Column, Column, Column, Column]:
-    """(ix0, iy0, ix1, iy1) covering cell-index ranges of a box."""
-    side = 1 << level
-    ix0 = axis_index_col(xmin, extent.xmin, extent.width(), side)
-    ix1 = axis_index_col(xmax, extent.xmin, extent.width(), side)
-    iy0 = axis_index_col(ymin, extent.ymin, extent.height(), side)
-    iy1 = axis_index_col(ymax, extent.ymin, extent.height(), side)
-    return ix0, iy0, ix1, iy1
 
 
 def explode_cells(
@@ -130,24 +111,12 @@ def explode_cells(
     )
 
 
-def ref_cell_col(
-    a_xmin: Column, a_ymin: Column, b_xmin: Column, b_ymin: Column,
-    extent: Extent, level: int,
-) -> Column:
-    """Cell containing the min-corner of the intersection of boxes a and b."""
-    side = 1 << level
-    rx = axis_index_col(F.greatest(a_xmin, b_xmin), extent.xmin, extent.width(), side)
-    ry = axis_index_col(F.greatest(a_ymin, b_ymin), extent.ymin, extent.height(), side)
-    return rx * F.lit(side) + ry
-
-
 def ref_cell_sql(
     a_xmin: str, a_ymin: str, b_xmin: str, b_ymin: str,
     extent: Extent, level: int,
 ) -> str:
-    """SQL-string twin of ``ref_cell_col`` over backticked column names
-    (identical parsed tree; used on the join hot paths to avoid per-node
-    py4j latency)."""
+    """Cell containing the min-corner of the intersection of boxes a and b,
+    over plain column names (backticked here)."""
     side = 1 << level
     rx = axis_index_sql(
         f"greatest(`{a_xmin}`, `{b_xmin}`)", extent.xmin, extent.width(), side)
@@ -157,24 +126,12 @@ def ref_cell_sql(
 
 
 # ---------------------------------------------------------------------------
-# numpy twins (inside Arrow UDFs)
+# numpy (inside Arrow UDFs)
 # ---------------------------------------------------------------------------
 
 def _axis_index_np(coord: np.ndarray, lo: float, size: float, side: int) -> np.ndarray:
     idx = np.floor((coord - lo) / size * side).astype(np.int64)
     return np.clip(idx, 0, side - 1)
-
-
-def cells_np(
-    boxes: np.ndarray, extent: Extent, level: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """boxes: (n, 4) [xmin, ymin, xmax, ymax] → (ix0, iy0, ix1, iy1)."""
-    side = 1 << level
-    ix0 = _axis_index_np(boxes[:, 0], extent.xmin, extent.width(), side)
-    ix1 = _axis_index_np(boxes[:, 2], extent.xmin, extent.width(), side)
-    iy0 = _axis_index_np(boxes[:, 1], extent.ymin, extent.height(), side)
-    iy1 = _axis_index_np(boxes[:, 3], extent.ymin, extent.height(), side)
-    return ix0, iy0, ix1, iy1
 
 
 def cell_of_point_np(x: np.ndarray, y: np.ndarray, extent: Extent, level: int) -> np.ndarray:
@@ -185,7 +142,7 @@ def cell_of_point_np(x: np.ndarray, y: np.ndarray, extent: Extent, level: int) -
 
 
 # ---------------------------------------------------------------------------
-# Morton / Z-order (index-table layout only)
+# Morton / Z-order (index-table layout and buckets)
 # ---------------------------------------------------------------------------
 
 def _spread_bits(v: np.ndarray) -> np.ndarray:
@@ -205,29 +162,11 @@ def morton_encode(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
     )
 
 
-def _unspread_bits(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.uint64) & np.uint64(0x55555555)
-    v = (v | (v >> np.uint64(1))) & np.uint64(0x33333333)
-    v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F)
-    v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF)
-    v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF)
-    return v
-
-
-def _spread_bits_col(v: Column) -> Column:
-    v = v.bitwiseAND(F.lit(0xFFFF))
-    v = (v.bitwiseOR(F.shiftleft(v, 8))).bitwiseAND(F.lit(0x00FF00FF))
-    v = (v.bitwiseOR(F.shiftleft(v, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-    v = (v.bitwiseOR(F.shiftleft(v, 2))).bitwiseAND(F.lit(0x33333333))
-    v = (v.bitwiseOR(F.shiftleft(v, 1))).bitwiseAND(F.lit(0x55555555))
-    return v
-
-
 def morton_sql(cell: str, level: int) -> str:
-    """SQL-string twin of ``morton_col`` over a backticked column name —
-    identical parsed tree (the Column form also duplicates each spread
-    stage's subtree; Catalyst trees share nothing either way). Exists for
-    the build hot path's plan-construction latency."""
+    """Z-order key of the row-major cell id in column ``cell`` (backticked
+    here): ``morton_encode(cell // side, cell % side)`` as pure bit ops
+    that stay in codegen. Builds the index's ``zorder`` and maps cells to
+    index-table buckets without collecting them to the driver."""
     side = 1 << level
 
     def spread(v: str) -> str:
@@ -243,24 +182,6 @@ def morton_sql(cell: str, level: int) -> str:
     return f"CAST(({spread(ix)} | shiftleft({spread(iy)}, 1)) AS BIGINT)"
 
 
-def morton_col(cell: Column, level: int) -> Column:
-    """Spark-column twin of ``morton_encode`` over a row-major cell id
-    (cell = ix * side + iy). Pure bit ops — stays in codegen; used to map
-    cells to index-table buckets without collecting them to the driver."""
-    side = F.lit(1 << level)
-    ix = F.floor(cell / side).cast("long")
-    iy = cell % side
-    return _spread_bits_col(ix).bitwiseOR(F.shiftleft(_spread_bits_col(iy), 1)).cast("long")
-
-
-def morton_decode(z: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    z = np.asarray(z).astype(np.uint64)
-    return (
-        _unspread_bits(z).astype(np.int64),
-        _unspread_bits(z >> np.uint64(1)).astype(np.int64),
-    )
-
-
 def hilbert_key_col(x, y, order: int = 8):
     """Hilbert-curve index of integer cell (x, y) on a 2^order grid —
     the locality-preserving alternative to Z-order for data layout
@@ -274,8 +195,6 @@ def hilbert_key_col(x, y, order: int = 8):
 
     x, y: Columns or names holding integers in [0, 2^order). → long
     Column."""
-    from pyspark.sql import functions as F
-
     cx = F.col(x) if isinstance(x, str) else x
     cy = F.col(y) if isinstance(y, str) else y
     xx, yy = cx.cast("long"), cy.cast("long")

@@ -1,15 +1,14 @@
 """Index build: distributed bulk load (the reference's ctor,
 prtree.h:188-259 + build at :470-585, re-expressed Spark-first).
 
-Pipeline: validate → explode covering cells → ONE shuffle on (cell, salt)
-with an in-partition sort → a streaming ``mapInArrow`` packs each cell's
-rows into an STRPack (one Arrow stream per partition; memory = one batch +
-one carried cell, never a whole partition; output rows leave Python as
-large multi-cell RecordBatches built zero-copy from numpy) → one index row
-per (cell, salt) holding the packed arrays, Morton-sorted for scan locality.
-The persisted form (see sources/store.py) is the durable analogue of the
-reference's cereal archive (prtree.h:119-143) — but columnar, partitioned,
-and partition-prunable.
+Pipeline: validate → explode covering cells → salt hot cells → ONE
+aggregate exchange on (cell, salt) → ``_pack_sql`` computes each group's
+STR layout and leaf MBBs JVM-side with higher-order functions (no Python
+workers) → one index row per (cell, salt) holding the packed arrays and
+the cell's Morton key for scan locality. The persisted form (see
+sources/store.py) is the durable analogue of the reference's cereal
+archive (prtree.h:119-143) — but columnar, partitioned, and
+partition-prunable.
 """
 
 from __future__ import annotations
@@ -22,11 +21,8 @@ from pyspark.sql.types import (
 
 from python_prtree_spark.config import DEFAULT_CONFIG, EngineConfig
 from python_prtree_spark.functions.geometry import validate_boxes_df
-from python_prtree_spark.functions.tiling import (
-    explode_cells, morton_encode, morton_sql,
-)
+from python_prtree_spark.functions.tiling import explode_cells, morton_sql
 from python_prtree_spark.operators.probe import _hot_cells, resolve_geometry
-from python_prtree_spark.operators.strpack import STRPack
 
 __all__ = ["build_index", "INDEX_SCHEMA"]
 
@@ -47,211 +43,22 @@ INDEX_SCHEMA = StructType([
 ])
 
 
-_FLUSH_CELLS = 1 << 10
-_FLUSH_ROWS = 1 << 20
-# avg rows/group at which the per-group STRPack loop overtakes the global
-# composite lexsort (measured crossover ~34; see process() docstring)
-_VEC_AVG = 32
-
-
-def _make_stream_pack_arrow(cfg: EngineConfig, with_salt: bool):
-    """Streaming ``mapInArrow`` pack kernel over partitions sorted by
-    (cell[, salt]): walks each Arrow batch group by group, builds an
-    STRPack per group, and emits index rows in LARGE RecordBatches
-    (~_FLUSH_CELLS cells each) assembled directly from numpy via
-    ``pa.ListArray.from_arrays`` — no pandas anywhere, no one-row-per-cell
-    batches (the prior mapInPandas kernel serialized one Arrow batch PER
-    CELL, which dominated build time). Memory per task = one Arrow batch +
-    one carried (partial) group + one output buffer."""
-    leaf_size, level = cfg.leaf_size, cfg.level
-    side = 1 << level
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        acc = {k: [] for k in
-               ("cell", "salt", "n", "ids", "bx0", "by0", "bx1", "by1",
-                "mbb", "mbb_n")}
-        acc_rows = 0
-        acc_cells = 0
-
-        def flush():
-            nonlocal acc_rows, acc_cells
-            cells = np.concatenate(acc["cell"]).astype(np.int64)
-            salts = np.concatenate(acc["salt"]).astype(np.int32)
-            ns = np.concatenate(acc["n"]).astype(np.int64)
-            z = morton_encode(cells // side, cells % side)
-            off = np.zeros(len(ns) + 1, np.int64)
-            np.cumsum(ns, out=off[1:])
-            off32 = pa.array(off, type=pa.int32())
-            mbb_ns = np.concatenate(acc["mbb_n"]).astype(np.int64)
-            mbb_off = np.zeros(len(mbb_ns) + 1, np.int64)
-            np.cumsum(mbb_ns, out=mbb_off[1:])
-
-            def cat(key, dtype):
-                return (np.concatenate(acc[key]) if acc[key]
-                        else np.empty(0, dtype))
-
-            rb = pa.record_batch(
-                [
-                    pa.array(cells), pa.array(salts), pa.array(z),
-                    pa.array(ns),
-                    pa.array(np.full(len(ns), leaf_size, np.int32)),
-                    pa.ListArray.from_arrays(off32, pa.array(cat("ids", np.int64))),
-                    pa.ListArray.from_arrays(off32, pa.array(cat("bx0", np.float64))),
-                    pa.ListArray.from_arrays(off32, pa.array(cat("by0", np.float64))),
-                    pa.ListArray.from_arrays(off32, pa.array(cat("bx1", np.float64))),
-                    pa.ListArray.from_arrays(off32, pa.array(cat("by1", np.float64))),
-                    pa.ListArray.from_arrays(
-                        pa.array(mbb_off, type=pa.int32()),
-                        pa.array(cat("mbb", np.float64)),
-                    ),
-                ],
-                names=["cell", "salt", "zorder", "n_rows", "leaf_size",
-                       "ids", "b_xmin", "b_ymin", "b_xmax", "b_ymax",
-                       "leaf_mbbs"],
-            )
-            for k in acc:
-                acc[k].clear()
-            acc_rows = 0
-            acc_cells = 0
-            return rb
-
-        def process(tbl):
-            """Pack every cell group in `tbl`. Two kernels, same output
-            bit-for-bit (measured A/B in one session, min over repeats):
-
-            * many tiny groups (avg < _VEC_AVG rows) → ONE composite
-              lexsort keyed (group, slab, y-center, x-rank) + ONE reduceat
-              for all leaf MBBs — identical order to STRPack._str_order
-              per cell (same keys, same stable ties). Flat ~0.75 s/M rows
-              regardless of group count; the per-group loop pays ~18 us of
-              interpreter overhead per cell (131k cells = 2.6 s/M rows).
-            * few large groups → per-group STRPack loop: small per-group
-              argsorts beat the 4-key global lexsort 3x when interpreter
-              overhead is amortized (256 cells: 0.24 s vs 0.76 s per M)."""
-            nonlocal acc_rows, acc_cells
-            n = tbl.num_rows
-            if n == 0:
-                return
-            cells = tbl.column("cell").to_numpy()
-            coords = np.column_stack([tbl.column(c).to_numpy() for c in BOX])
-            dids = tbl.column("_did").to_numpy()
-            if with_salt:
-                salts = tbl.column("salt").to_numpy()
-                new = np.flatnonzero((np.diff(cells) != 0) | (np.diff(salts) != 0)) + 1
-            else:
-                salts = None
-                new = np.flatnonzero(np.diff(cells) != 0) + 1
-            bounds = np.concatenate([[0], new, [n]]).astype(np.int64)
-            sizes = np.diff(bounds)
-            n_groups = len(sizes)
-
-            if n >= _VEC_AVG * n_groups:
-                for a, b in zip(bounds[:-1], bounds[1:]):
-                    pack = STRPack(dids[a:b], coords[a:b], leaf_size)
-                    acc["cell"].append(cells[a : a + 1])
-                    acc["salt"].append(salts[a : a + 1] if with_salt
-                                       else np.zeros(1, np.int32))
-                    acc["n"].append(np.array([pack.n], np.int64))
-                    acc["ids"].append(pack.ids)
-                    acc["bx0"].append(pack.boxes[:, 0])
-                    acc["by0"].append(pack.boxes[:, 1])
-                    acc["bx1"].append(pack.boxes[:, 2])
-                    acc["by1"].append(pack.boxes[:, 3])
-                    acc["mbb"].append(pack.leaf_mbbs.ravel())
-                    acc["mbb_n"].append(
-                        np.array([4 * len(pack.leaf_mbbs)], np.int64))
-                acc_rows += n
-                acc_cells += n_groups
-                return
-
-            gid = np.repeat(np.arange(n_groups), sizes)
-            cx = coords[:, 0] + coords[:, 2]
-            cy = coords[:, 1] + coords[:, 3]
-            # x-rank within group (stable, like argsort(cx, kind='stable'))
-            xorder = np.lexsort((cx, gid))
-            pos_in_group = np.arange(n) - np.repeat(bounds[:-1], sizes)
-            xrank = np.empty(n, np.int64)
-            xrank[xorder] = pos_in_group
-            # per-group slab geometry (STRPack._str_order arithmetic)
-            n_leaves = -(-sizes // leaf_size)
-            n_slabs = np.maximum(1, np.ceil(np.sqrt(n_leaves)).astype(np.int64))
-            rps = -(-sizes // n_slabs)
-            slab = xrank // np.repeat(rps, sizes)
-            final = np.lexsort((xrank, cy, slab, gid))
-            o_ids = dids[final]
-            o_coords = coords[final]
-            # leaf MBBs: starts at group_offset + k*leaf_size, one reduceat
-            leaf_base = np.repeat(bounds[:-1], n_leaves)
-            leaf_cum = np.zeros(n_groups + 1, np.int64)
-            np.cumsum(n_leaves, out=leaf_cum[1:])
-            leaf_k = np.arange(leaf_cum[-1]) - np.repeat(leaf_cum[:-1], n_leaves)
-            leaf_starts = leaf_base + leaf_k * leaf_size
-            mins = np.minimum.reduceat(o_coords[:, :2], leaf_starts, axis=0)
-            maxs = np.maximum.reduceat(o_coords[:, 2:], leaf_starts, axis=0)
-            mbbs = np.hstack([mins, maxs])  # (total_leaves, 4) row-per-leaf
-
-            acc["cell"].append(cells[bounds[:-1]])
-            acc["salt"].append(salts[bounds[:-1]] if with_salt
-                               else np.zeros(n_groups, np.int32))
-            acc["n"].append(sizes)
-            acc["ids"].append(o_ids)
-            acc["bx0"].append(o_coords[:, 0])
-            acc["by0"].append(o_coords[:, 1])
-            acc["bx1"].append(o_coords[:, 2])
-            acc["by1"].append(o_coords[:, 3])
-            acc["mbb"].append(mbbs.ravel())
-            acc["mbb_n"].append(n_leaves * 4)
-            acc_rows += n
-            acc_cells += n_groups
-
-        carry = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            if tbl.num_rows == 0:
-                continue
-            cells = tbl.column("cell").to_numpy()
-            cut = int(np.searchsorted(cells, cells[-1], side="left"))
-            if with_salt:
-                salts = tbl.column("salt").to_numpy()
-                cut += int(np.searchsorted(salts[cut:], salts[-1], side="left"))
-            carry = tbl.slice(cut)
-            if cut > 0:
-                process(tbl.slice(0, cut))
-                if acc_cells >= _FLUSH_CELLS or acc_rows >= _FLUSH_ROWS:
-                    yield flush()
-        if carry is not None and carry.num_rows:
-            process(carry)
-        if acc["cell"]:
-            yield flush()
-
-    return fn
-
-
 def _pack_sql(
     cells: DataFrame, cfg: EngineConfig, extra_cols: list[str] | None = None
 ) -> DataFrame:
     """JVM-only pack kernel: the whole STR layout as Spark SQL higher-order
     functions — groupBy (cell, salt) → collect_list → two ``array_sort``
     over structs whose leading fields are the sort keys ((cx, id), then
-    (slab, cy, x-rank)) → leaf MBBs via sequence + slice + aggregate.
-    ZERO Python workers. Interleaved same-session A/B vs the Arrow kernel
-    (min over 6-8 runs): 8M boxes / 16k cells on local[32] — SQL 1.8 s
-    (4.5 M boxes/s) vs Arrow 4.8 s (the JVM→Python Arrow transfer, not
-    pack compute, dominates Arrow build cost); 600k boxes — a wash
-    (1.5 s vs 1.4 s, SQL's larger plan-compile cost is fixed, not
-    per-row). Same single exchange; the shuffle is the partial-aggregated
-    collect_list exchange.
+    (slab, cy, x-rank)) → leaf MBBs via sequence + slice + array_min/max.
+    ZERO Python workers; the shuffle is the partial-aggregated
+    collect_list exchange. 8M boxes / 16k cells on local[32]: 1.8 s
+    (4.5 M boxes/s), 2.7x a streaming mapInArrow numpy pack over the same
+    exchange — the JVM→Python Arrow transfer, not pack compute, dominated
+    that kernel's cost.
 
-    Layout parity: identical (cell, salt) groups, identical id SETS and
-    leaf geometry as the Arrow kernel; within-pack row order breaks
-    x-center ties by id (the numpy kernel ties on shuffle arrival order —
-    both are valid STR layouts; closed-interval AABB refinement makes
-    query results layout-independent, reference bounding_box.h:104-123).
+    Layout: each pack equals ``STRPack(ids, boxes, leaf_size)`` over its
+    rows in ascending id order — x-center ties break by id — row for row
+    and leaf for leaf (pinned by tests/test_build_kernels.py).
 
     extra_cols: names of carried coordinate columns (nd persisted indexes:
     min2/max2[, min3/max3]) riding through both layout sorts as TRAILING
@@ -351,10 +158,10 @@ def build_index(
     validate: bool = True,
     n_data_hint: int | None = None,
     only_cells: "list[int] | DataFrame | None" = None,
-    kernel: str = "sql",
     extra_cols: list[str] | None = None,
 ) -> tuple[DataFrame, EngineConfig]:
-    """→ (index DataFrame with INDEX_SCHEMA, resolved config).
+    """→ (index DataFrame with INDEX_SCHEMA, resolved config), packed by
+    ``_pack_sql`` behind one aggregate exchange on (cell, salt).
 
     Validation mirrors the reference ctor (prtree.h:151-185): NaN/Inf,
     min>max, subnormals raise before any shuffle.
@@ -368,17 +175,9 @@ def build_index(
     n_data_hint must be the EXACT row count or None (same contract as
     batch_query: an underestimate can skip hot-cell salting).
 
-    kernel: 'sql' (default) packs JVM-side via _pack_sql — no Python
-    workers, 2.3x faster end-to-end; 'arrow' keeps the streaming
-    mapInArrow numpy kernel (useful as a cross-check and for engines
-    without higher-order-function support)."""
-    if kernel not in ("sql", "arrow"):
-        raise ValueError(
-            f"kernel must be 'sql' or 'arrow', got {kernel!r}"
-        )
+    extra_cols: carried coordinate columns of nd persisted indexes (see
+    ``_pack_sql``)."""
     extra_cols = list(extra_cols or [])
-    if extra_cols and kernel != "sql":
-        raise ValueError("extra_cols (nd persisted indexes) require kernel='sql'")
     slim = data_df.select(data_id, *BOX, *extra_cols)
     if validate:
         validate_boxes_df(slim.select(data_id, *BOX), cfg)
@@ -392,27 +191,16 @@ def build_index(
     elif only_cells is not None:
         cells = cells.where(F.col("cell").isin([int(c) for c in only_cells]))
     hot = _hot_cells(cells, cfg, n)
-    keys = ["cell"]
-    if hot is not None:
+    if hot is None:
+        cells = cells.withColumn("salt", F.lit(0))
+    else:
         cells = (
             cells.join(F.broadcast(hot), on="cell", how="left")
             .withColumn("salt", F.when(F.col("n_salts").isNull(), F.lit(0))
                         .otherwise(F.pmod(F.xxhash64("_did"), F.col("n_salts")).cast("int")))
             .drop("n_salts")
         )
-        keys = ["cell", "salt"]
-    if "salt" not in cells.columns:
-        cells = cells.withColumn("salt", F.lit(0))
-    if kernel == "sql":
-        return _pack_sql(
-            cells.select("_did", "cell", "salt", *BOX, *extra_cols),
-            cfg, extra_cols,
-        ), cfg
-    with_salt = "salt" in keys
-    index = (
-        cells.select("_did", "cell", "salt", *BOX)
-        .repartition(*[F.col(k) for k in keys])
-        .sortWithinPartitions(*keys)
-        .mapInArrow(_make_stream_pack_arrow(cfg, with_salt), schema=INDEX_SCHEMA)
-    )
-    return index, cfg
+    return _pack_sql(
+        cells.select("_did", "cell", "salt", *BOX, *extra_cols),
+        cfg, extra_cols,
+    ), cfg

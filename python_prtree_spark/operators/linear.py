@@ -145,7 +145,7 @@ def line_density(
 
     def owned(a, e_lo, e_w, idx):
         """Does THIS cell own coordinate ``a`` under the engine's clamped
-        floor-routing (axis_index_col)? Boundary coordinates belong to
+        floor-routing (axis_index_sql)? Boundary coordinates belong to
         exactly one cell; out-of-extent coordinates to none."""
         fi = F.floor((a - F.lit(e_lo)) / F.lit(e_w) * F.lit(side))
         clamped = F.greatest(F.lit(0), F.least(F.lit(side - 1), fi))

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from python_prtree_spark.config import DEFAULT_CONFIG, EngineConfig
-from python_prtree_spark.functions.tiling import explode_cells, ref_cell_col
+from python_prtree_spark.functions.tiling import explode_cells, ref_cell_sql
 from python_prtree_spark.operators.probe import _pick_strategy, resolve_geometry
 
 __all__ = ["batch_query_nd", "query_intersections_nd", "box_cols"]
@@ -117,10 +117,9 @@ def batch_query_nd(
         & (F.col("q_ymin") <= F.col("d_ymax")) & (F.col("d_ymin") <= F.col("q_ymax"))
         & _extra_pred("q", "d", dims)
     )
-    ref = ref_cell_col(
-        F.col("q_xmin"), F.col("q_ymin"), F.col("d_xmin"), F.col("d_ymin"),
-        cfg.extent, cfg.level,
-    )
+    ref = F.expr(ref_cell_sql(
+        "q_xmin", "q_ymin", "d_xmin", "d_ymin", cfg.extent, cfg.level,
+    ))
     return (
         q.join(d, on="cell")
         .where(pred & (ref == F.col("cell")))

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from python_prtree_spark.config import DEFAULT_CONFIG, EngineConfig
-from python_prtree_spark.functions.tiling import explode_cells, ref_cell_col
+from python_prtree_spark.functions.tiling import explode_cells, ref_cell_sql
 from python_prtree_spark.operators.components import connected_components
 
 __all__ = [
@@ -115,10 +115,9 @@ def overlap_iou_pairs(
         F.col(id_col).alias("id_b"), F.col(score_col).alias("score_b"), "cell",
         *[F.col(c).alias(f"b_{c}") for c in BOX],
     )
-    ref = ref_cell_col(
-        F.col("a_xmin"), F.col("a_ymin"), F.col("b_xmin"), F.col("b_ymin"),
-        cfg.extent, cfg.level,
-    )
+    ref = F.expr(ref_cell_sql(
+        "a_xmin", "a_ymin", "b_xmin", "b_ymin", cfg.extent, cfg.level,
+    ))
     return (
         a.join(b, on="cell")
         .where(
@@ -369,10 +368,9 @@ def temporal_iou_edges(
         F.col(id_col).alias("id_b"), "cell",
         *[F.col(c).alias(f"b_{c}") for c in BOX],
     )
-    ref = ref_cell_col(
-        F.col("a_xmin"), F.col("a_ymin"), F.col("b_xmin"), F.col("b_ymin"),
-        cfg.extent, cfg.level,
-    )
+    ref = F.expr(ref_cell_sql(
+        "a_xmin", "a_ymin", "b_xmin", "b_ymin", cfg.extent, cfg.level,
+    ))
     return (
         a.join(
             b,

@@ -55,7 +55,7 @@ def resolve_geometry(
     One columnar aggregate pass; at 100 TB callers should pass explicit
     extent+level (table-level stats) to skip it."""
     n = n_hint
-    if cfg.extent is None or cfg.level is None:
+    if cfg.extent is None or (cfg.level is None and n is None):
         aggs = []
         if n is None:
             aggs.append(F.count(F.lit(1)).alias("n"))

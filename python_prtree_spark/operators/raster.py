@@ -596,7 +596,7 @@ def label_regions_boxes(
 
     side = 1 << cfg.level
     grid = side * px
-    thr = int(threshold)
+    thr = max(1, int(threshold))
     routed = explode_cells(
         boxes_df.select("xmin", "ymin", "xmax", "ymax"), cfg.extent, cfg.level
     )

@@ -82,14 +82,15 @@ def _with_bucket(index_df: DataFrame, level: int) -> DataFrame:
     )
 
 
-def _bucket_of_cell(cell, level: int):
-    """Column expr: index-table bucket of a row-major cell id (must match
-    _with_bucket, which buckets on the pack's zorder)."""
-    from python_prtree_spark.functions.tiling import morton_col
+def _bucket_of_cell(cell: str, level: int):
+    """Column expr: index-table bucket of the row-major cell id in column
+    ``cell``. Must match _with_bucket, which buckets on the pack's zorder:
+    both keys come from ``morton_sql``."""
+    from python_prtree_spark.functions.tiling import morton_sql
 
     return F.least(
         F.lit(N_BUCKETS - 1),
-        F.floor(morton_col(cell, level) / F.lit(_per_bucket(level))),
+        F.floor(F.expr(morton_sql(cell, level)) / F.lit(_per_bucket(level))),
     ).cast("int")
 
 
@@ -385,7 +386,7 @@ def merge_refresh(
     dirty_buckets = sorted(
         r["bucket"]
         for r in dirty_cells.select(
-            _bucket_of_cell(F.col("cell"), level).alias("bucket")
+            _bucket_of_cell("cell", level).alias("bucket")
         ).distinct().collect()
     )
     if not dirty_buckets:
@@ -977,7 +978,7 @@ class LoadedIndex:
             probed_buckets = [
                 r["b"]
                 for r in qcells.select(
-                    _bucket_of_cell(F.col("cell"), level).alias("b")
+                    _bucket_of_cell("cell", level).alias("b")
                 ).distinct().collect()  # bounded by N_BUCKETS
             ]
             if probed_buckets:

@@ -1,7 +1,7 @@
-"""Regression tests for the round-2 ADVICE findings: kernel-name
-validation, bucket-scheme meta versioning, LoadedIndex.point_query column
-parameters, the kNN broadcast-route hard row cap, and the
-multiplication-only raycast crossing test."""
+"""Regression tests for review findings: geometry resolution with a
+configured extent and an exact row hint, bucket-scheme meta versioning,
+LoadedIndex.point_query column parameters, the kNN broadcast-route hard
+row cap, and the multiplication-only raycast crossing test."""
 
 from __future__ import annotations
 
@@ -19,12 +19,22 @@ from tests.conftest import boxes_df, oracle_pairs, rand_boxes
 CFG = EngineConfig(extent=Extent(0, 0, 100, 100), level=4)
 
 
-def test_build_kernel_name_validated(spark):
-    d = boxes_df(spark, rand_boxes(20, 11))
-    with pytest.raises(ValueError, match="kernel"):
-        build_index(d, CFG, kernel="SQL")
-    with pytest.raises(ValueError, match="kernel"):
-        build_index(d, CFG, kernel="arow")
+def test_extent_without_level_and_exact_hint(spark):
+    """extent set, level None, exact n hint: nothing is left to aggregate,
+    so geometry resolves without a job (an empty agg() used to raise)."""
+    from python_prtree_spark import batch_query
+
+    cfg = EngineConfig(extent=Extent(0, 0, 100, 100), level=None)
+    boxes = rand_boxes(300, 12, ext_max=5.0)
+    qboxes = rand_boxes(30, 13, ext_max=5.0)
+    d = boxes_df(spark, boxes)
+    idx, resolved = build_index(d, cfg, n_data_hint=len(boxes))
+    assert resolved.level == cfg.resolve_level(len(boxes))
+    packed = {i for r in idx.select("ids").collect() for i in r["ids"]}
+    assert packed == set(range(len(boxes)))
+    got = batch_query(d, boxes_df(spark, qboxes, id_col="qid"), cfg,
+                      n_data_hint=len(boxes)).collect()
+    assert {(r["qid"], r["id"]) for r in got} == oracle_pairs(qboxes, boxes)
 
 
 def test_legacy_meta_disables_bucket_pruning_not_results(spark, tmp_path):

@@ -146,7 +146,7 @@ def test_anchor_targets_with_per_image_gt_ids(spark):
     w = want[cols].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(g, w)
     # id remap consistency: gt_id in the per-image run maps to its twin
-    m = got.set_index(tuple(key) if False else ["img", "ax", "ay", "k"])["gt_id"]
+    m = got.set_index(["img", "ax", "ay", "k"])["gt_id"]
     mw = want.set_index(["img", "ax", "ay", "k"])["gt_id"]
     for k_, v in m.items():
         assert int(v) * 1000 + k_[0] == int(mw[k_])

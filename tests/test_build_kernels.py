@@ -1,72 +1,54 @@
-"""Build-kernel equivalence: the JVM-only SQL pack (default) and the
-streaming mapInArrow numpy pack (kernel='arrow', the cross-check path)
-must produce interchangeable indexes — identical (cell, salt) groups,
-identical per-pack id SETS and row counts, and leaf MBBs that tightly
-bound their rows. Within-pack ROW ORDER may differ (the kernels break
-x-center ties differently — by id vs by shuffle arrival; both are valid
-STR layouts and query results are layout-independent, SURVEY §2.2)."""
+"""Build-kernel layout: every pack the JVM-only SQL pack (``_pack_sql``)
+emits must equal the numpy reference ``STRPack`` over the same rows taken
+in ascending id order — row for row and leaf for leaf — and carry the
+Morton key of its cell. Coordinates are whole numbers so that x-center
+ties, which both layouts break by id, are common."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from python_prtree_spark import EngineConfig, Extent
+from python_prtree_spark.functions.tiling import morton_encode
 from python_prtree_spark.operators.build import build_index
-from tests.conftest import boxes_df, rand_boxes
+from python_prtree_spark.operators.strpack import STRPack
+from tests.conftest import boxes_df
 
 EXT = Extent(0, 0, 100, 100)
-
-
-def _packs(idx):
-    out = {}
-    for r in idx.collect():
-        key = (r["cell"], r["salt"])
-        out[key] = {
-            "n": r["n_rows"],
-            "ids": frozenset(r["ids"]),
-            "rows": sorted(zip(r["ids"], r["b_xmin"], r["b_ymin"],
-                               r["b_xmax"], r["b_ymax"])),
-            "mbbs": r["leaf_mbbs"],
-            "zorder": r["zorder"],
-        }
-    return out
+B_COLS = ["b_xmin", "b_ymin", "b_xmax", "b_ymax"]
 
 
 @pytest.mark.parametrize("salted", [False, True])
-def test_sql_and_arrow_kernels_equivalent(spark, salted):
+def test_sql_pack_matches_strpack(spark, salted):
+    rng = np.random.default_rng(91 if salted else 92)
+    # leaf_size 8 (the reference's B) gives most packs several slabs and a
+    # partial last leaf
+    cfg = EngineConfig(extent=EXT, level=3, leaf_size=8)
     if salted:
         # cram rows into one cell to force the hot-cell salt path
-        rng = np.random.default_rng(91)
-        mins = rng.random((2500, 2)) * 5.0
-        boxes = np.hstack([mins, mins + rng.random((2500, 2))])
-        cfg = EngineConfig(extent=EXT, level=3, salt_threshold=500)
+        n, span, cfg = 2500, 5, cfg.with_(salt_threshold=500)
     else:
-        boxes = rand_boxes(1500, 92, ext_max=4.0)
-        cfg = EngineConfig(extent=EXT, level=3)
-    d = boxes_df(spark, boxes)
-    n = len(boxes)
-    sql_packs = _packs(build_index(d, cfg, n_data_hint=n, kernel="sql")[0])
-    arw_packs = _packs(build_index(d, cfg, n_data_hint=n, kernel="arrow")[0])
+        n, span = 1500, 100
+    mins = np.floor(rng.random((n, 2)) * span)
+    boxes = np.hstack([mins, mins + np.floor(rng.random((n, 2)) * 4)])
+    idx, cfg = build_index(boxes_df(spark, boxes), cfg, n_data_hint=n)
+    packs = idx.collect()
+    side = 1 << cfg.level
 
     if salted:
-        # salt assignment keys on xxhash64(id) in both kernels → same split
-        assert any(s > 0 for (_, s) in sql_packs)
-    assert set(sql_packs) == set(arw_packs)
-    for key, sp in sql_packs.items():
-        ap = arw_packs[key]
-        assert sp["n"] == ap["n"] and sp["zorder"] == ap["zorder"]
-        assert sp["ids"] == ap["ids"]
-        # same rows (as sets) even though STR order may differ
-        assert sp["rows"] == ap["rows"]
-        # leaf MBBs tightly bound their own kernel's leaves: same count,
-        # and each kernel's MBB union covers the pack's rows exactly
-        assert len(sp["mbbs"]) == len(ap["mbbs"])
-        for packs in (sp, ap):
-            m = np.asarray(packs["mbbs"], dtype=np.float64).reshape(-1, 4)
-            rows = np.asarray([r[1:] for r in packs["rows"]], dtype=np.float64)
-            assert m[:, 0].min() == rows[:, 0].min()
-            assert m[:, 1].min() == rows[:, 1].min()
-            assert m[:, 2].max() == rows[:, 2].max()
-            assert m[:, 3].max() == rows[:, 3].max()
+        assert any(r["salt"] > 0 for r in packs)
+    assert len(packs) > 1
+    for r in packs:
+        ids = np.asarray(r["ids"], dtype=np.int64)
+        order = np.argsort(ids)
+        rows = np.column_stack([np.asarray(r[c]) for c in B_COLS])
+        ref = STRPack(ids[order], rows[order], cfg.leaf_size)
+        assert r["n_rows"] == ref.n and r["leaf_size"] == cfg.leaf_size
+        np.testing.assert_array_equal(ids, ref.ids)
+        for k, c in enumerate(B_COLS):
+            np.testing.assert_array_equal(np.asarray(r[c]), ref.boxes[:, k])
+        np.testing.assert_array_equal(
+            np.asarray(r["leaf_mbbs"]), ref.leaf_mbbs.ravel())
+        cell = r["cell"]
+        assert r["zorder"] == int(morton_encode(cell // side, cell % side))

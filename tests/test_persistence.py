@@ -156,7 +156,7 @@ def test_refresh_leaves_untouched_buckets_byte_identical(spark, tmp_index):
     dirty_buckets = {
         f"bucket={r['b']}"
         for r in t2.dirty_cells.select(
-            _bucket_of_cell(F.col("cell"), t.cfg.level).alias("b")
+            _bucket_of_cell("cell", t.cfg.level).alias("b")
         ).distinct().collect()
     }
     assert len(dirty_buckets) < len(before)  # mutation is localized
@@ -261,8 +261,6 @@ def test_bucket_locality(spark):
     Morton range of 16 keys at level 5) maps to at most 2 buckets — a
     spatially local probe batch prunes to a few partitions. (pmod bucketing
     would scatter the same block across 16 buckets.)"""
-    from pyspark.sql import functions as F
-
     from python_prtree_spark.sources.store import _bucket_of_cell
 
     side = 32  # level 5
@@ -270,9 +268,35 @@ def test_bucket_locality(spark):
     df = spark.createDataFrame([(c,) for c in cells], "cell long")
     got = {
         r["b"] for r in
-        df.select(_bucket_of_cell(F.col("cell"), 5).alias("b")).collect()
+        df.select(_bucket_of_cell("cell", 5).alias("b")).collect()
     }
     assert len(got) <= 2, got
+
+
+@pytest.mark.parametrize("level", [3, 6])
+def test_bucket_of_cell_matches_written_bucket(spark, level):
+    """The read side's bucket of a cell (_bucket_of_cell, used to prune and
+    to pick the buckets a refresh rewrites) equals the bucket the writer
+    files its pack under (_with_bucket over build_index's zorder), for
+    every cell of the grid."""
+    from python_prtree_spark.operators.build import build_index
+    from python_prtree_spark.sources.store import (
+        _bucket_of_cell, _with_bucket,
+    )
+
+    side = 1 << level
+    # one box at the centre of every cell
+    c = (np.arange(side) + 0.5) * (100.0 / side)
+    cx, cy = (a.ravel() for a in np.meshgrid(c, c))
+    boxes = np.column_stack([cx - 0.1, cy - 0.1, cx + 0.1, cy + 0.1])
+    cfg = CFG.with_(level=level)
+    idx, _ = build_index(boxes_df(spark, boxes), cfg, n_data_hint=len(boxes))
+    rows = _with_bucket(idx, level).select(
+        "cell", "bucket", _bucket_of_cell("cell", level).alias("b")
+    ).collect()
+    assert sorted(r["cell"] for r in rows) == list(range(side * side))
+    assert all(r["bucket"] == r["b"] for r in rows)
+    assert len({r["b"] for r in rows}) > 1
 
 
 def test_loaded_index_full_operator_surface(spark, tmp_index):

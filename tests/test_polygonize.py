@@ -137,7 +137,7 @@ def test_polygonize_boxes_fused_equals_chained(spark):
         "xmin": mins[:, 0], "ymin": mins[:, 1],
         "xmax": mins[:, 0] + ext[:, 0], "ymax": mins[:, 1] + ext[:, 1],
     }))
-    for thr in (1, 3):
+    for thr in (0, 1, 3):
         chained = sorted(
             tuple(r) for r in polygonize_regions(
                 rasterize_counts(boxes, CFG, px=PX), CFG, px=PX, threshold=thr

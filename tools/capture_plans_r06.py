@@ -20,11 +20,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-
-def fmt(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from python_prtree_spark.plans.explain import explain_str as fmt  # noqa: E402
 
 
 def main() -> None:

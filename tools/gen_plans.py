@@ -15,11 +15,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-
-def fmt(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from python_prtree_spark.plans.explain import explain_str as fmt  # noqa: E402
 
 
 def main() -> None:
@@ -77,13 +73,11 @@ def main() -> None:
         fmt(query_intersections(pb, e.CFG.with_(strategy="packed"))),
     ))
     sections.append((
-        "build_index — JVM-only SQL pack (default kernel)",
+        "build_index — JVM-only SQL pack",
         "Explode covering cells → ONE aggregate exchange on (cell, salt) → "
         "collect_list → array_sort comparators compute the STR layout and "
         "leaf MBBs entirely JVM-side. No Python workers anywhere in the "
-        "plan (the Arrow transfer, not pack compute, dominated build cost); "
-        "kernel='arrow' keeps the streaming mapInArrow numpy pack as a "
-        "cross-check path.",
+        "plan (the Arrow transfer, not pack compute, dominated build cost).",
         fmt(build_index(pb, e.CFG)[0]),
     ))
     sections.append((
