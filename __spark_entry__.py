@@ -876,15 +876,13 @@ def _q_pagerank(spark, sf_dir):
     = md5-free row_number rank, out-edges 1+(src·k+c) mod N for
     (k,c) ∈ {(7,1),(13,2),(31,3)}) — every score an exact int64 in 1e12
     units, bit-identical to the unrolled SQL oracle."""
-    from pyspark.sql import Window
-
     from python_prtree_spark.operators.graph import pagerank
 
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    n = d.count()
-    r = d.select(
-        F.row_number().over(Window.orderBy("doc_id")).cast("long").alias("src")
-    )
+    n = _read(spark, sf_dir, "documents").count()
+    # row_number() over doc_id numbers the nodes 1..n whatever the ids
+    # hold, so the node frame is that range: no single-partition window,
+    # and nothing for the edge branches and power iterations to re-derive
+    r = spark.range(1, n + 1).select(F.col("id").alias("src"))
     edges = None
     for k, c in ((7, 1), (13, 2), (31, 3)):
         ek = r.select(

@@ -123,7 +123,7 @@ def line_density(
     per routed row, and ONE map-side-combinable groupBy(cell) sums ~16
     byte partials. Zero-length clips are filtered before the aggregate.
     """
-    from python_prtree_spark.functions.tiling import explode_cells
+    from python_prtree_spark.functions.tiling import axis_index_sql, explode_cells
 
     side = 1 << cfg.level
     cw = cfg.extent.width() / side
@@ -143,12 +143,12 @@ def line_density(
     dx = F.col("bx") - F.col("ax")
     dy = F.col("by") - F.col("ay")
 
-    def owned(a, e_lo, e_w, idx):
-        """Does THIS cell own coordinate ``a`` under the engine's clamped
-        floor-routing (axis_index_sql)? Boundary coordinates belong to
-        exactly one cell; out-of-extent coordinates to none."""
-        fi = F.floor((a - F.lit(e_lo)) / F.lit(e_w) * F.lit(side))
-        clamped = F.greatest(F.lit(0), F.least(F.lit(side - 1), fi))
+    def owned(c, e_lo, e_w, idx):
+        """Does THIS cell own coordinate column ``c`` under the engine's
+        clamped floor-routing (axis_index_sql)? Boundary coordinates belong
+        to exactly one cell; out-of-extent coordinates to none."""
+        a = F.col(c)
+        clamped = F.expr(axis_index_sql(f"`{c}`", e_lo, e_w, side))
         return (a >= F.lit(e_lo)) & (a <= F.lit(e_lo + e_w)) & (clamped == idx)
 
     def axis_window(d, a, lo, hi, own):
@@ -162,11 +162,11 @@ def line_density(
 
     x_lo, x_hi = axis_window(
         dx, F.col("ax"), cx0, cx1,
-        owned(F.col("ax"), cfg.extent.xmin, cfg.extent.width(), ix),
+        owned("ax", cfg.extent.xmin, cfg.extent.width(), ix),
     )
     y_lo, y_hi = axis_window(
         dy, F.col("ay"), cy0, cy1,
-        owned(F.col("ay"), cfg.extent.ymin, cfg.extent.height(), iy),
+        owned("ay", cfg.extent.ymin, cfg.extent.height(), iy),
     )
     t0 = F.greatest(F.lit(0.0), x_lo, y_lo)
     t1 = F.least(F.lit(1.0), x_hi, y_hi)

@@ -118,8 +118,11 @@ class PRTreeTable:
     @classmethod
     def from_index(cls, spark, path: str, data_id: str = "id") -> "PRTreeTable":
         """Reopen a persisted index as a mutable table bound to the SAME
-        directory: cfg and the live row count come from the index meta
-        (no jobs scheduled here), the base rows are reconstructed lazily
+        directory: cfg and the live row count come from the index meta.
+        The only jobs are ``load_index``'s: one reads a Parquet footer for
+        the schema, and one lists the snapshot's files when it names more
+        than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        (32) of them. The base rows are reconstructed lazily
         from the persisted pack arrays, and ``refresh_index(path)`` after
         mutations re-packs ONLY dirty cells — untouched bucket
         directories stay byte-identical, no O(index) re-pack. Payload
@@ -244,7 +247,12 @@ class PRTreeTable:
             if isinstance(ids, int):
                 ids = [ids]
             uniq = sorted({int(i) for i in ids})
-            ids_df = spark.createDataFrame([(i,) for i in uniq], f"{self.data_id} long")
+            # built JVM-side: createDataFrame over Python rows would run a
+            # Python worker job in whichever action first reads the frame
+            ids_df = spark.range(1, numPartitions=1).selectExpr(
+                f"explode(CAST(array({', '.join(map(str, uniq))}) AS ARRAY<BIGINT>))"
+                f" AS `{self.data_id}`"
+            )
             n_req = len(uniq)
         hit = self.df.join(ids_df, on=self.data_id, how="left_semi")
         n_hit = hit.count()

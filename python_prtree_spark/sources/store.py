@@ -574,9 +574,9 @@ def save_index(
 
 class LoadedIndex:
     """A persisted index opened for probing — the analogue of
-    ``PRTree(fname)`` (reference core.py:146-162). Probing joins exploded
-    probe cells against index rows on (cell[, salt]) and runs the same
-    vectorized STRPack probe, reconstructed zero-copy from Arrow arrays."""
+    ``PRTree(fname)`` (reference core.py:146-162). Probing descends the
+    persisted packs in Spark SQL: leaf MBBs first, then the rows of the
+    leaves that hit (see ``batch_query``)."""
 
     def __init__(self, spark: SparkSession, path: str, version: int | None = None):
         import json
@@ -942,112 +942,79 @@ class LoadedIndex:
         self, query_df: DataFrame, query_id: str = "qid", data_id: str = "id",
         with_centroids: bool = False,
     ) -> DataFrame:
-        """Probe the persisted packs. Scan cost scales with the PROBE
-        footprint, not the index size: the probe cells' bucket set
-        (bounded by N_BUCKETS) partition-prunes the parquet read, and a
-        cell semi-join drops non-probed packs before the cogroup shuffle —
-        a 100 TB index answers a localized probe batch by reading only the
-        touched bucket directories.
+        """Probe the persisted packs with the reference's two-level descent
+        (find_all, prtree.h:587-729), entirely in Spark SQL: each pack
+        explodes into one row per leaf (its MBB and its slice of the pack
+        arrays), leaves join the exploded probes on ``cell`` where the leaf
+        MBB meets the probe, and only the hit leaves' rows are unzipped and
+        refined by the closed-interval predicate (all dims) and the
+        reference-point rule. Work per cell is probes x leaves + hits x
+        leaf_size, as in ``STRPack.query``; no Python worker runs. A salted
+        cell's rows each live in one of its packs, so joining on ``cell``
+        alone cannot duplicate a pair.
+
+        Scan cost scales with the PROBE footprint, not the index size: the
+        probe cells' bucket set (bounded by N_BUCKETS) partition-prunes the
+        parquet read, so a 100 TB index answers a localized probe batch by
+        reading only the touched bucket directories.
 
         with_centroids=True adds the matched box's centroid (_cx, _cy) to
         each output row — the packs hold the box coordinates, so kNN's
         radius loop scores candidates without any join back to a base
         table."""
-        from python_prtree_spark.functions.tiling import cell_of_point_np, explode_cells
-        from python_prtree_spark.operators.strpack import STRPack
+        from python_prtree_spark.functions.tiling import explode_cells
+        from python_prtree_spark.operators.probe import _ov_ref_sql
 
         cfg = self.cfg
         extras = _extra_box_cols(self.dims)
         if extras:
             # nd index: probes arrive in the nd convention — route on dims
-            # 0-1, carry dims 2..D-1 for in-kernel refinement
+            # 0-1, carry dims 2..D-1 for the refine
             from python_prtree_spark.operators.nd import _as2d
 
             query_df = _as2d(query_df, query_id, self.dims, keep_extra=True)
+        box = ["xmin", "ymin", "xmax", "ymax", *extras]
         q = explode_cells(
-            query_df.select(query_id, "xmin", "ymin", "xmax", "ymax", *extras),
-            cfg.extent, cfg.level,
-        ).select(
-            F.col(query_id).alias("_qid"),
-            "cell", "xmin", "ymin", "xmax", "ymax", *extras,
+            query_df.select(query_id, *box), cfg.extent, cfg.level,
+        ).selectExpr(
+            f"CAST(`{query_id}` AS BIGINT) AS _qid", "cell",
+            *[f"CAST(`{c}` AS DOUBLE) AS q_{c}" for c in box],
         )
-        extent, level = cfg.extent, cfg.level
-        qcells = q.select("cell").distinct()
         idx = self.df
         if "bucket" in idx.columns and self._prune_buckets:
             probed_buckets = [
                 r["b"]
-                for r in qcells.select(
-                    _bucket_of_cell("cell", level).alias("b")
+                for r in q.select(
+                    _bucket_of_cell("cell", cfg.level).alias("b")
                 ).distinct().collect()  # bounded by N_BUCKETS
             ]
             if probed_buckets:
                 idx = idx.where(F.col("bucket").isin(probed_buckets))
-        idx = idx.join(qcells, on="cell", how="left_semi")
-
-        def probe(idx_pdf, qdf):
-            import numpy as np
-            import pandas as pd
-
-            cols = {query_id: pd.Series(dtype="int64"),
-                    data_id: pd.Series(dtype="int64")}
-            if with_centroids:
-                cols["_cx"] = pd.Series(dtype="float64")
-                cols["_cy"] = pd.Series(dtype="float64")
-            empty = pd.DataFrame(cols)
-            if len(idx_pdf) == 0 or len(qdf) == 0:
-                return empty
-            outs = []
-            qboxes = qdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy(dtype=np.float64)
-            qids = qdf["_qid"].to_numpy(dtype=np.int64)
-            qex = (
-                qdf[extras].to_numpy(dtype=np.float64) if extras else None
-            )  # (nq, 2*(D-2)): min2, max2[, min3, max3]
-            # plain zip over column arrays, one iteration per (cell,salt)
-            # pack — not iterrows (per-pack Series construction was pure
-            # overhead; the loop body is already vectorized)
-            ex_cols = [idx_pdf[f"b_{c}"] for c in extras] if extras else []
-            for ids_, bx0, by0, bx1, by1, mbbs, ls, cell_v, *bex in zip(
-                idx_pdf["ids"], idx_pdf["b_xmin"], idx_pdf["b_ymin"],
-                idx_pdf["b_xmax"], idx_pdf["b_ymax"], idx_pdf["leaf_mbbs"],
-                idx_pdf["leaf_size"], idx_pdf["cell"], *ex_cols,
-            ):
-                pack = STRPack.from_arrays(ids_, bx0, by0, bx1, by1, mbbs, ls)
-                qi, pos = pack.query(qboxes)
-                if not len(qi):
-                    continue
-                if extras:
-                    # closed-interval refinement on the carried dims: pack
-                    # row order == stored array order, so pos indexes the
-                    # b_min{d}/b_max{d} arrays directly
-                    k_ex = np.ones(len(qi), dtype=bool)
-                    for d2 in range(len(extras) // 2):
-                        dmin = np.asarray(bex[2 * d2], dtype=np.float64)[pos]
-                        dmax = np.asarray(bex[2 * d2 + 1], dtype=np.float64)[pos]
-                        k_ex &= (dmin <= qex[qi, 2 * d2 + 1]) \
-                            & (qex[qi, 2 * d2] <= dmax)
-                    qi, pos = qi[k_ex], pos[k_ex]
-                    if not len(qi):
-                        continue
-                refx = np.maximum(qboxes[qi, 0], pack.boxes[pos, 0])
-                refy = np.maximum(qboxes[qi, 1], pack.boxes[pos, 1])
-                keep = cell_of_point_np(refx, refy, extent, level) == int(cell_v)
-                out = {query_id: qids[qi[keep]], data_id: pack.ids[pos[keep]]}
-                if with_centroids:
-                    hit = pos[keep]
-                    out["_cx"] = (pack.boxes[hit, 0] + pack.boxes[hit, 2]) / 2
-                    out["_cy"] = (pack.boxes[hit, 1] + pack.boxes[hit, 3]) / 2
-                outs.append(pd.DataFrame(out))
-            return pd.concat(outs) if outs else empty
-
-        schema = f"{query_id} long, {data_id} long"
-        if with_centroids:
-            schema += ", _cx double, _cy double"
-        return (
-            idx.groupBy("cell")
-            .cogroup(q.groupBy("cell"))
-            .applyInPandas(probe, schema=schema)
+        # one row per leaf; size(leaf_mbbs) >= 4 keeps sequence(0, -1) out
+        leaf = [f"leaf_mbbs[4 * _k + {i}] AS l_{c}" for i, c in enumerate(box[:4])]
+        sliced = [("ids", "d_id")] + [(f"b_{c}", f"d_{c}") for c in box]
+        leaves = idx.where("size(leaf_mbbs) >= 4").selectExpr(
+            "*", "explode(sequence(0, size(leaf_mbbs) div 4 - 1)) AS _k",
+        ).selectExpr(
+            "cell", *leaf,
+            *[f"slice(`{a}`, _k * leaf_size + 1, leaf_size) AS {b}" for a, b in sliced],
         )
+        hit_leaves = leaves.join(q, on="cell").where(
+            "l_xmin <= q_xmax AND q_xmin <= l_xmax AND "
+            "l_ymin <= q_ymax AND q_ymin <= l_ymax"
+        )
+        refine = " AND ".join(
+            [_ov_ref_sql(cfg, "q", "d")]
+            + [f"d_min{d} <= q_max{d} AND q_min{d} <= d_max{d}"
+               for d in range(2, self.dims)]
+        )
+        out = [f"_qid AS `{query_id}`", f"d_id AS `{data_id}`"]
+        if with_centroids:
+            out += ["(d_xmin + d_xmax) / 2 AS _cx", "(d_ymin + d_ymax) / 2 AS _cy"]
+        return hit_leaves.selectExpr(
+            "cell", "_qid", *[f"q_{c}" for c in box],
+            f"inline(arrays_zip({', '.join(b for _, b in sliced)}))",
+        ).where(refine).selectExpr(*out)
 
 
 def load_index(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from python_prtree_spark import (
     EngineConfig, Extent, PRTreeTable, load_index, save_index,
 )
+from python_prtree_spark.sources.store import _read_manifest, current_snapshot_version
 from tests.conftest import boxes_df, oracle_pairs, rand_boxes
 
 CFG = EngineConfig(extent=Extent(0, 0, 100, 100), level=4, strategy="sql")
@@ -52,6 +53,11 @@ def test_from_index_mutate_refresh_query(spark, tmp_path):
     after = _bucket_fingerprint(os.path.join(path, "index"))
     changed = [b for b in before if after.get(b) != before[b]]
     assert 0 < len(changed) < len(before), "refresh was not partition-granular"
+    # the current snapshot mixes the build's files with the refresh's
+    # (part-NNNNN-<write uuid>...), and the read below must cover both
+    idx_dir = os.path.join(path, "index")
+    files = _read_manifest(idx_dir, current_snapshot_version(idx_dir))["files"]
+    assert len({f[11:47] for fs in files.values() for f in fs}) == 2
 
     idx = load_index(spark, path)
     assert idx.size() == 2999

@@ -61,6 +61,22 @@ def test_erase_missing_raises(spark):
         t.erase([10_000])
 
 
+def test_erase_list_wide_and_duplicate_ids(spark):
+    """The id list becomes a JVM-side frame: ids above 2^31 keep their
+    value, duplicates count once, and a missing id still raises."""
+    boxes = rand_boxes(20, 54)
+    ids = np.arange(20, dtype=np.int64) + (1 << 33)
+    t = PRTreeTable(boxes_df(spark, boxes, ids=ids), CFG)
+    t2 = t.erase([int(ids[3]), int(ids[3]), int(ids[7])])
+    assert t2.size() == 18
+    left = {r["id"] for r in t2.df.select("id").collect()}
+    assert left == set(ids.tolist()) - {int(ids[3]), int(ids[7])}
+    with pytest.raises(RuntimeError, match="Given index is not found"):
+        t.erase([int(ids[0]), (1 << 33) + 99])
+    with pytest.raises(RuntimeError, match="Given index is not found"):
+        t.erase([int(ids[0]) - (1 << 32)])  # equal low 32 bits
+
+
 def test_rebuild_invariant(spark):
     """test_rebuild.py:69-94: identical results pre/post rebuild."""
     boxes = rand_boxes(300, 48)

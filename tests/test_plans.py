@@ -1222,3 +1222,21 @@ def test_anchor_assign_plan_pure_jvm_one_shuffle(spark):
     assert "FlatMapGroupsInPandas" not in plan and "pythonUDF" not in plan, plan
     assert "Join" not in plan, plan
     assert "hashpartitioning(img" in plan, plan
+
+
+def test_loaded_index_read_plan_jvm_only(spark, tmp_path):
+    """LoadedIndex.batch_query descends leaf MBBs in Spark SQL: no Python
+    node of any kind in the read plan, centroids included."""
+    from python_prtree_spark import load_index, save_index
+
+    path = str(tmp_path / "idx")
+    save_index(boxes_df(spark, rand_boxes(300, 98, ext_max=5.0)), path, CFG)
+    q = spark.range(5).selectExpr(
+        "id AS qid", "id * 10.0 AS xmin", "id * 10.0 AS ymin",
+        "id * 10.0 + 5 AS xmax", "id * 10.0 + 5 AS ymax",
+    )
+    plan = explain_str(load_index(spark, path).batch_query(q, with_centroids=True))
+    for node in ("FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                 "MapInPandas", "MapInArrow", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert "inline(arrays_zip" in plan, plan
