@@ -148,19 +148,9 @@ class PRTreeTable:
         amortized-compaction contract, not correctness."""
         if not snap.needs_rebuild():
             return snap
-        all_cells = explode_cells(
-            snap._xy(snap.df).drop(snap.data_id), snap.cfg.extent, snap.cfg.level
-        ).select("cell").distinct()
-        # union the pending dirty set: cells the mutations VACATED are not
-        # covered by the (possibly smaller, possibly empty) live table but
-        # still hold stale packs that the full re-pack must clear
-        if snap.dirty_cells is not None:
-            all_cells = all_cells.unionByName(
-                snap.dirty_cells.select(F.col(snap.dirty_cells.columns[0]).alias("cell"))
-            ).distinct()
         return PRTreeTable(
             snap.df, snap.cfg, snap.data_id, dims=snap.dims,
-            _n_at_build=snap._n, _dirty_cells=all_cells,
+            _n_at_build=snap._n, _dirty_cells=snap._all_cells(),
             _validate=False, _n_hint=snap._n,
         )
 
@@ -168,6 +158,27 @@ class PRTreeTable:
         return explode_cells(
             self._xy(rows_df).drop(self.data_id), self.cfg.extent, self.cfg.level
         ).select("cell").distinct()
+
+    def _all_cells(self) -> DataFrame:
+        """Every cell of a full re-pack: the cells the live rows cover plus
+        the pending dirty set — cells the mutations VACATED are not covered
+        by the (possibly smaller, possibly empty) live table but still hold
+        stale packs that the re-pack must clear."""
+        cells = self._touched_cells(self.df)
+        if self.dirty_cells is None:
+            return cells
+        return cells.unionByName(
+            self.dirty_cells.select(F.col(self.dirty_cells.columns[0]).alias("cell"))
+        ).distinct()
+
+    def _ids_frame(self, ids: list[int]) -> DataFrame:
+        """One `data_id` BIGINT row per given id, in order, duplicates kept.
+        Built JVM-side: createDataFrame over Python rows would run a Python
+        worker job in whichever action first reads the frame."""
+        arr = ", ".join(str(int(i)) for i in ids)
+        return self.df.sparkSession.range(1, numPartitions=1).selectExpr(
+            f"explode(CAST(array({arr}) AS ARRAY<BIGINT>)) AS `{self.data_id}`"
+        )
 
     def _with_dirty(self, extra: DataFrame) -> DataFrame:
         if self.dirty_cells is None:
@@ -239,7 +250,6 @@ class PRTreeTable:
     def erase(self, ids: int | list[int] | DataFrame) -> "PRTreeTable":
         """Delete by id (scalar, list, or DataFrame); missing id raises
         RuntimeError with the reference's message (prtree.h:795-799)."""
-        spark = self.df.sparkSession
         if isinstance(ids, DataFrame):
             ids_df = ids.select(F.col(ids.columns[0]).alias(self.data_id)).distinct()
             n_req = ids_df.count()
@@ -247,12 +257,7 @@ class PRTreeTable:
             if isinstance(ids, int):
                 ids = [ids]
             uniq = sorted({int(i) for i in ids})
-            # built JVM-side: createDataFrame over Python rows would run a
-            # Python worker job in whichever action first reads the frame
-            ids_df = spark.range(1, numPartitions=1).selectExpr(
-                f"explode(CAST(array({', '.join(map(str, uniq))}) AS ARRAY<BIGINT>))"
-                f" AS `{self.data_id}`"
-            )
+            ids_df = self._ids_frame(uniq)
             n_req = len(uniq)
         hit = self.df.join(ids_df, on=self.data_id, how="left_semi")
         n_hit = hit.count()
@@ -278,15 +283,8 @@ class PRTreeTable:
         n_at_build resets to the live count and every cell is marked dirty
         so a following ``refresh_index`` rewrites the whole persisted
         index (never silently drops pending dirty cells)."""
-        all_cells = explode_cells(
-            self._xy(self.df).drop(self.data_id), self.cfg.extent, self.cfg.level
-        ).select("cell").distinct()
-        if self.dirty_cells is not None:  # vacated cells still need clearing
-            all_cells = all_cells.unionByName(
-                self.dirty_cells.select(F.col(self.dirty_cells.columns[0]).alias("cell"))
-            ).distinct()
         return PRTreeTable(self.df, self.cfg, self.data_id, dims=self.dims,
-                           _validate=False, _dirty_cells=all_cells,
+                           _validate=False, _dirty_cells=self._all_cells(),
                            _n_hint=self._n)
 
     def refresh_index(self, path: str) -> None:
@@ -313,10 +311,9 @@ class PRTreeTable:
             # save_index(dims=) writes, so refreshed buckets stay readable
             # by the nd probe kernel
             from python_prtree_spark.operators.nd import _as2d
-            from python_prtree_spark.sources.store import _extra_box_cols
 
-            src = _as2d(self.df, self.data_id, self.dims, keep_extra=True)
-            extra_cols = _extra_box_cols(self.dims)
+            src = _as2d(self.df, self.data_id, self.dims)
+            extra_cols = _probe._carried_cols(self.dims)
         index, _ = build_index(src, self.cfg, self.data_id, validate=False,
                                only_cells=dirty, n_data_hint=self._n,
                                extra_cols=extra_cols)
@@ -402,10 +399,9 @@ class PRTreeTable:
 
     def get_obj(self, ids: list[int]) -> DataFrame:
         """Payload rows for the given ids; unset payloads come back NULL
-        (reference prtree.h:269-277: get_obj of unset id → None)."""
-        spark = self.df.sparkSession
-        ids_df = spark.createDataFrame([(int(i),) for i in ids], f"{self.data_id} long")
-        return ids_df.join(
+        (reference prtree.h:269-277: get_obj of unset id → None). One row
+        per requested id, duplicates included."""
+        return self._ids_frame(ids).join(
             self.df.select(self.data_id, *self.payload_cols),
             on=self.data_id, how="left",
         )
@@ -473,38 +469,18 @@ class PRTreeTable:
         return [{c: r[c] for c in pcols} for r in rows]
 
     def batch_query_array(self, query_df: DataFrame, query_id: str = "qid") -> DataFrame:
-        """(query_id, n_hits, ids sorted ascending) at every dimension —
-        the nd path aggregates batch_query_nd pairs with the identical
-        empty-array contract (reference prtree.h:731-733)."""
-        if self.dims == 2:
-            return _probe.batch_query_array(
-                self.df, query_df, self.cfg, self.data_id, query_id
-            )
-        pairs = self.batch_query(query_df, query_id)
-        agg = pairs.groupBy(query_id).agg(
-            F.sort_array(F.collect_list(self.data_id)).alias("ids")
-        )
-        return (
-            query_df.select(query_id)
-            .join(agg, on=query_id, how="left")
-            .select(
-                query_id,
-                F.coalesce(F.size("ids"), F.lit(0)).alias("n_hits"),
-                F.coalesce("ids", F.array().cast("array<long>")).alias("ids"),
-            )
+        """(query_id, n_hits, ids sorted ascending) at every dimension,
+        with the reference's empty-array contract (prtree.h:731-733)."""
+        return _probe._hits_array(
+            self.batch_query(query_df, query_id), query_df, self.data_id, query_id
         )
 
     def point_query(self, points_df: DataFrame, query_id: str = "qid") -> DataFrame:
         """Point probes. For dims > 2 pass columns p0..p{D-1}; points are
         degenerate boxes (reference prtree.h:596-615)."""
-        if self.dims == 2:
-            return _probe.point_query(self.df, points_df, self.cfg, self.data_id, query_id)
-        q = points_df.select(
-            query_id,
-            *[F.col(f"p{d}").alias(f"min{d}") for d in range(self.dims)],
-            *[F.col(f"p{d}").alias(f"max{d}") for d in range(self.dims)],
+        return self.batch_query(
+            _probe._points_as_boxes(points_df, query_id, self.dims), query_id
         )
-        return self.batch_query(q, query_id)
 
     def query_intersections(self) -> DataFrame:
         if self.dims == 2:

@@ -28,29 +28,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from python_prtree_spark.config import DEFAULT_CONFIG, EngineConfig
-from python_prtree_spark.functions.tiling import (
-    cell_of_point_np,
-    explode_cells,
-    ref_cell_sql,
-)
-from python_prtree_spark.operators.probe import (
-    _hot_cells,
-    _pick_strategy,
-    resolve_geometry,
-)
+from python_prtree_spark.functions.tiling import cell_of_point_np, explode_cells
+from python_prtree_spark.operators.probe import BOX, _hot_cells, _ov_ref_sql, _route
 from python_prtree_spark.operators.strpack import STRPack
 
 __all__ = ["query_intersections"]
-
-BOX = ["xmin", "ymin", "xmax", "ymax"]
 
 
 def _pairs_sql(data_c: DataFrame, cfg: EngineConfig, data_id: str) -> DataFrame:
     """JVM self-join on cell. Skew note: both sides arrive cell-partitioned
     into a sort-merge join, the shape AQE's OptimizeSkewedJoin splits at
     runtime — no manual salting layer on this path."""
-    from python_prtree_spark.operators.probe import _ov_ref_sql
-
     a = data_c.selectExpr(
         f"`{data_id}` AS id_a", "`cell`",
         *[f"`{c}` AS a_{c}" for c in BOX],
@@ -234,17 +222,10 @@ def query_intersections(
     n_data_hint: int | None = None,
 ) -> DataFrame:
     """All intersecting pairs (id_a < id_b), each exactly once."""
-    from python_prtree_spark.operators.probe import _tiny_sql_shortcut
-
     slim = data_df.select(data_id, *BOX)
-    if _tiny_sql_shortcut(slim, cfg, n_data_hint):
-        # Catalyst's size estimate alone picks 'sql' — no count job, and
-        # the sql path has no salting, so no histogram either
-        data_c = explode_cells(slim, cfg.extent, cfg.level)
-        return _pairs_sql(data_c, cfg, data_id)
-    cfg, n_data = resolve_geometry(data_df.select(data_id, *BOX), cfg, n_data_hint)
-    data_c = explode_cells(data_df.select(data_id, *BOX), cfg.extent, cfg.level)
-    if _pick_strategy(cfg, n_data) == "sql":
+    cfg, n_data, strategy = _route(slim, None, cfg, n_data_hint)
+    data_c = explode_cells(slim, cfg.extent, cfg.level)
+    if strategy == "sql":
         return _pairs_sql(data_c, cfg, data_id)
     it = data_c.schema[data_id].dataType.simpleString()
     salted = _salted_cells(data_c, cfg, n_data, data_id)

@@ -6,6 +6,15 @@ core.py:607-687, find_all at prtree.h:587-729). Point probes are degenerate
 boxes (prtree.h:596-615). Single-probe results sort ascending
 (prtree.h:786); we sort in the array form.
 
+This module is the ONE place a box-overlap join is routed and written, at
+every dimension (the reference's D is a template parameter of one
+``PRTree``, prtree.h:64). ``batch_query``, ``batch_query_payload``,
+``pairs.query_intersections`` and ``nd.batch_query_nd`` all decide their
+strategy through ``_route`` (zero-job tiny shortcut → resolve_geometry →
+``_pick_strategy``), and the 'sql' cell join is ``_batch_query_sql`` alone.
+Cells route on dims 0-1; nd callers carry dims 2..D-1 (``_carried_cols``)
+through both strategies, where the closed-interval predicate refines them.
+
 Two physical strategies, both exact and both duplicate-free WITHOUT a
 post-join dedup shuffle (reference-point rule — a pair is emitted only in
 the cell holding the min-corner of its intersection):
@@ -45,6 +54,12 @@ from python_prtree_spark.operators.strpack import STRPack
 __all__ = ["batch_query", "batch_query_array", "point_query", "resolve_geometry"]
 
 BOX = ["xmin", "ymin", "xmax", "ymax"]
+
+
+def _carried_cols(dims: int) -> list[str]:
+    """The coordinate columns carried past the 2D routing plane for dims
+    > 2: min2, max2[, min3, max3] (nd naming, operators/nd.py)."""
+    return [f"{mm}{d}" for d in range(2, dims) for mm in ("min", "max")]
 
 
 def resolve_geometry(
@@ -94,21 +109,6 @@ _TINY_PROBE_BYTES = 4 << 20  # conservative vs spark.sql.autoBroadcastJoinThresh
 _TINY_DATA_BYTES = 4 << 20
 
 
-def _tiny_sql_shortcut(data_df: DataFrame, cfg: EngineConfig,
-                       n_data_hint: int | None) -> bool:
-    """True when strategy 'sql' can be chosen from Catalyst's own size
-    estimate alone (no job scheduled). Only fires when geometry is fully
-    configured and no exact count was provided — an explicit hint keeps
-    the precise crossover decision."""
-    if (cfg.strategy != "auto" or cfg.extent is None or cfg.level is None
-            or n_data_hint is not None):
-        return False
-    from python_prtree_spark.plans.explain import plan_size_estimate
-
-    est = plan_size_estimate(data_df)
-    return est is not None and est <= _TINY_DATA_BYTES
-
-
 def _pick_strategy(cfg: EngineConfig, n_data: int,
                    query_df: DataFrame | None = None) -> str:
     if cfg.strategy != "auto":
@@ -131,39 +131,74 @@ def _pick_strategy(cfg: EngineConfig, n_data: int,
     return "packed"
 
 
+def _route(slim: DataFrame, query_df: DataFrame | None, cfg: EngineConfig,
+           n_hint: int | None) -> tuple[EngineConfig, int | None, str]:
+    """The one strategy decision of every box-overlap join → (resolved cfg,
+    data row count, 'sql' | 'packed'). `slim` is the (id, xmin..ymax) data
+    side; `query_df` is None for a self-join.
+
+    With geometry fully configured, strategy 'auto' and no exact count,
+    a data side whose Catalyst plan estimate is under _TINY_DATA_BYTES
+    takes 'sql' with ZERO jobs and n = None (an explicit hint keeps the
+    precise crossover decision). Otherwise resolve_geometry fills in
+    extent/level/n and _pick_strategy decides."""
+    if (cfg.strategy == "auto" and cfg.extent is not None
+            and cfg.level is not None and n_hint is None):
+        from python_prtree_spark.plans.explain import plan_size_estimate
+
+        est = plan_size_estimate(slim)
+        if est is not None and est <= _TINY_DATA_BYTES:
+            return cfg, None, "sql"
+    cfg, n = resolve_geometry(slim, cfg, n_hint)
+    return cfg, n, _pick_strategy(cfg, n, query_df)
+
+
 # ---------------------------------------------------------------------------
 # 'sql' strategy — pure JVM
 # ---------------------------------------------------------------------------
 
-def _ov_ref_sql(cfg: EngineConfig, a: str, b: str) -> str:
+def _ov_ref_sql(cfg: EngineConfig, a: str, b: str, carried: list[str] = ()) -> str:
     """Overlap predicate + reference-point rule between `{a}_*` and `{b}_*`
     box columns, as ONE SQL string (identical parsed tree to the Column
-    form; string-built because it sits on every join's construction path)."""
+    form; string-built because it sits on every join's construction path).
+    `carried` (from _carried_cols) appends the closed-interval refine on
+    dims 2..D-1."""
     ref = ref_cell_sql(f"{a}_xmin", f"{a}_ymin", f"{b}_xmin", f"{b}_ymin",
                        cfg.extent, cfg.level)
-    return (
+    return " AND ".join([
         f"`{a}_xmin` <= `{b}_xmax` AND `{b}_xmin` <= `{a}_xmax` AND "
         f"`{a}_ymin` <= `{b}_ymax` AND `{b}_ymin` <= `{a}_ymax` AND "
-        f"({ref}) = `cell`"
-    )
+        f"({ref}) = `cell`",
+        *[f"`{a}_{lo}` <= `{b}_{hi}` AND `{b}_{lo}` <= `{a}_{hi}`"
+          for lo, hi in zip(carried[::2], carried[1::2])],
+    ])
 
 
 def _batch_query_sql(
     data_c: DataFrame, query_c: DataFrame, cfg: EngineConfig,
-    data_id: str, query_id: str,
+    data_id: str, query_id: str, carried: list[str] = (),
+    q_payload: list[str] = (), box_out: bool = False,
 ) -> DataFrame:
+    """The cell equi-join. `carried` dims are refined in the predicate;
+    `box_out` projects the data box (plain xmin..ymax) and `q_payload`
+    probe columns ride the join untouched."""
     d = data_c.selectExpr(
         f"`{data_id}` AS _did", "`cell`",
-        *[f"`{c}` AS d_{c}" for c in BOX],
+        *[f"`{c}` AS d_{c}" for c in (*BOX, *carried)],
     )
     q = query_c.selectExpr(
         f"`{query_id}` AS _qid", "`cell`",
-        *[f"`{c}` AS q_{c}" for c in BOX],
+        *[f"`{c}` AS q_{c}" for c in (*BOX, *carried)],
+        *[f"`{c}`" for c in q_payload],
     )
     return (
         q.join(d, on="cell")
-        .where(F.expr(_ov_ref_sql(cfg, "q", "d")))
-        .selectExpr(f"_qid AS `{query_id}`", f"_did AS `{data_id}`")
+        .where(F.expr(_ov_ref_sql(cfg, "q", "d", carried)))
+        .selectExpr(
+            f"_qid AS `{query_id}`", f"_did AS `{data_id}`",
+            *[f"d_{c} AS `{c}`" for c in (BOX if box_out else ())],
+            *[f"`{c}`" for c in q_payload],
+        )
     )
 
 
@@ -184,13 +219,15 @@ def _batch_query_sql(
 _OUT_BATCH_ROWS = 1 << 19
 
 
-def _make_pbsm_fn(cfg: EngineConfig, with_salt: bool, extra_dims: int = 0):
-    """extra_dims > 0: the unioned rows also carry min{d}/max{d} columns for
-    d in [2, 2+extra_dims) — the closed-interval predicate is refined on
-    those after the 2D STRPack probe (ND parity: cells route on dims 0-1,
-    the predicate decides on ALL dims; reference bounding_box.h:104-123)."""
+def _make_pbsm_fn(cfg: EngineConfig, with_salt: bool, carried: list[str] = ()):
+    """`carried` (from _carried_cols): the unioned rows also carry the
+    min{d}/max{d} columns of dims 2..D-1 — the closed-interval predicate is
+    refined on those after the 2D STRPack probe (ND parity: cells route on
+    dims 0-1, the predicate decides on ALL dims; reference
+    bounding_box.h:104-123)."""
     extent, level, leaf_size = cfg.extent, cfg.level, cfg.leaf_size
-    extra_cols = [f"{mm}{d}" for d in range(2, 2 + extra_dims) for mm in ("min", "max")]
+    extra_cols = list(carried)
+    extra_dims = len(extra_cols) // 2
 
     def fn(batches):
         import numpy as np
@@ -296,20 +333,19 @@ def _make_pbsm_fn(cfg: EngineConfig, with_salt: bool, extra_dims: int = 0):
 def _batch_query_packed(
     data_c: DataFrame, query_c: DataFrame, cfg: EngineConfig,
     data_id: str, query_id: str, salt_counts: DataFrame | None,
-    extra_dims: int = 0,
+    carried: list[str] = (),
 ) -> DataFrame:
     qt = query_c.schema[query_id].dataType.simpleString()
     dt = data_c.schema[data_id].dataType.simpleString()
-    extra = [f"{mm}{d}" for d in range(2, 2 + extra_dims) for mm in ("min", "max")]
     d = data_c.select(
         F.lit(0).alias("side"), "cell",
         F.col(data_id).cast(dt).alias("_did"),
-        F.lit(None).cast(qt).alias("_qid"), *BOX, *extra,
+        F.lit(None).cast(qt).alias("_qid"), *BOX, *carried,
     )
     q = query_c.select(
         F.lit(1).alias("side"), "cell",
         F.lit(None).cast(dt).alias("_did"),
-        F.col(query_id).cast(qt).alias("_qid"), *BOX, *extra,
+        F.col(query_id).cast(qt).alias("_qid"), *BOX, *carried,
     )
     keys = ["cell"]
     if salt_counts is not None:
@@ -332,7 +368,7 @@ def _batch_query_packed(
     out = (
         u.repartition(*[F.col(k) for k in keys])
         .sortWithinPartitions(*keys, "side")
-        .mapInArrow(_make_pbsm_fn(cfg, salt_counts is not None, extra_dims),
+        .mapInArrow(_make_pbsm_fn(cfg, salt_counts is not None, carried),
                     schema=f"_q {qt}, _d {dt}")
     )
     return out.select(F.col("_q").alias(query_id), F.col("_d").alias(data_id))
@@ -398,6 +434,24 @@ def _hot_cells(data_c: DataFrame, cfg: EngineConfig,
 # public API
 # ---------------------------------------------------------------------------
 
+def _box_join(
+    data_df: DataFrame, query_df: DataFrame, cfg: EngineConfig,
+    data_id: str, query_id: str, n_data_hint: int | None,
+    carried: list[str] = (),
+) -> DataFrame:
+    """Route, explode and join: the body of batch_query at every D.
+    `carried` columns ride both strategies and refine the predicate."""
+    cfg, n_data, strategy = _route(
+        data_df.select(data_id, *BOX), query_df, cfg, n_data_hint
+    )
+    data_c = explode_cells(data_df.select(data_id, *BOX, *carried), cfg.extent, cfg.level)
+    query_c = explode_cells(query_df.select(query_id, *BOX, *carried), cfg.extent, cfg.level)
+    if strategy == "sql":
+        return _batch_query_sql(data_c, query_c, cfg, data_id, query_id, carried)
+    salt = _hot_cells(data_c, cfg, n_data)
+    return _batch_query_packed(data_c, query_c, cfg, data_id, query_id, salt, carried)
+
+
 def batch_query(
     data_df: DataFrame,
     query_df: DataFrame,
@@ -415,19 +469,7 @@ def batch_query(
     stay exact; one Python worker may eat a whole hot cell). PRTreeTable
     threads exact counts; external callers who merely estimate must pass
     None."""
-    slim = data_df.select(*([data_id] + BOX))
-    if _tiny_sql_shortcut(slim, cfg, n_data_hint):
-        data_c = explode_cells(slim, cfg.extent, cfg.level)
-        query_c = explode_cells(query_df.select(query_id, *BOX), cfg.extent, cfg.level)
-        return _batch_query_sql(data_c, query_c, cfg, data_id, query_id)
-    cfg, n_data = resolve_geometry(slim, cfg, n_data_hint)
-    data_c = explode_cells(data_df.select(data_id, *BOX), cfg.extent, cfg.level)
-    query_c = explode_cells(query_df.select(query_id, *BOX), cfg.extent, cfg.level)
-    strategy = _pick_strategy(cfg, n_data, query_df)
-    if strategy == "sql":
-        return _batch_query_sql(data_c, query_c, cfg, data_id, query_id)
-    salt = _hot_cells(data_c, cfg, n_data)
-    return _batch_query_packed(data_c, query_c, cfg, data_id, query_id, salt)
+    return _box_join(data_df, query_df, cfg, data_id, query_id, n_data_hint)
 
 
 def batch_query_payload(
@@ -438,7 +480,7 @@ def batch_query_payload(
     query_id: str = "qid",
     n_data_hint: int | None = None,
     q_payload: "tuple[str, ...] | list[str]" = (),
-) -> "tuple[DataFrame | None, int]":
+) -> "tuple[DataFrame | None, int | None]":
     """Fused variant of ``batch_query`` for refine-style callers
     (distance_join and friends) that would otherwise join the pair table
     back to both inputs to recover coordinates. When the resolved strategy
@@ -450,52 +492,26 @@ def batch_query_payload(
     to ``batch_query`` + join-backs, passing n_data as the hint so the
     count is not paid twice.
 
-    → (pairs-with-payload DataFrame or None, resolved n_data)."""
+    → (pairs-with-payload DataFrame or None, resolved n_data; None when
+    the zero-job shortcut took 'sql')."""
     q_payload = list(q_payload)
-    slim = data_df.select(*([data_id] + BOX))
-    if _tiny_sql_shortcut(slim, cfg, n_data_hint):
-        n_data = -1  # unused: the shortcut always takes the sql branch
-    else:
-        cfg, n_data = resolve_geometry(slim, cfg, n_data_hint)
-        if _pick_strategy(cfg, n_data, query_df) != "sql":
-            return None, n_data
-    data_c = explode_cells(data_df.select(data_id, *BOX), cfg.extent, cfg.level)
+    slim = data_df.select(data_id, *BOX)
+    cfg, n_data, strategy = _route(slim, query_df, cfg, n_data_hint)
+    if strategy != "sql":
+        return None, n_data
+    data_c = explode_cells(slim, cfg.extent, cfg.level)
     query_c = explode_cells(
         query_df.select(query_id, *BOX, *q_payload), cfg.extent, cfg.level
     )
-    d = data_c.selectExpr(
-        f"`{data_id}` AS _did", "`cell`",
-        *[f"`{c}` AS d_{c}" for c in BOX],
-    )
-    q = query_c.selectExpr(
-        f"`{query_id}` AS _qid", "`cell`",
-        *[f"`{c}` AS q_{c}" for c in BOX],
-        *[f"`{c}`" for c in q_payload],
-    )
-    out = (
-        q.join(d, on="cell")
-        .where(F.expr(_ov_ref_sql(cfg, "q", "d")))
-        .selectExpr(
-            f"_qid AS `{query_id}`", f"_did AS `{data_id}`",
-            *[f"d_{c} AS `{c}`" for c in BOX],
-            *[f"`{c}`" for c in q_payload],
-        )
-    )
-    return out, n_data
+    return _batch_query_sql(
+        data_c, query_c, cfg, data_id, query_id,
+        q_payload=q_payload, box_out=True,
+    ), n_data
 
 
-def batch_query_array(
-    data_df: DataFrame,
-    query_df: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    data_id: str = "id",
-    query_id: str = "qid",
-) -> DataFrame:
-    """Array form mirroring the reference's batch_query_array
-    (prtree.h:731-733): (query_id, n_hits, ids sorted ascending); queries
-    with no hits appear with an empty array, like the reference's empty
-    inner lists."""
-    pairs = batch_query(data_df, query_df, cfg, data_id, query_id)
+def _hits_array(pairs: DataFrame, query_df: DataFrame,
+                data_id: str, query_id: str) -> DataFrame:
+    """The array form of a pair table (see batch_query_array)."""
     agg = pairs.groupBy(query_id).agg(
         F.sort_array(F.collect_list(data_id)).alias("ids")
     )
@@ -510,6 +526,33 @@ def batch_query_array(
     )
 
 
+def batch_query_array(
+    data_df: DataFrame,
+    query_df: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    data_id: str = "id",
+    query_id: str = "qid",
+) -> DataFrame:
+    """Array form mirroring the reference's batch_query_array
+    (prtree.h:731-733): (query_id, n_hits, ids sorted ascending); queries
+    with no hits appear with an empty array, like the reference's empty
+    inner lists."""
+    pairs = batch_query(data_df, query_df, cfg, data_id, query_id)
+    return _hits_array(pairs, query_df, data_id, query_id)
+
+
+def _points_as_boxes(points_df: DataFrame, query_id: str, dims: int = 2,
+                     x: str = "x", y: str = "y") -> DataFrame:
+    """Point probes → degenerate boxes (reference prtree.h:596-615,
+    743-754). 2D reads `x`/`y` into xmin..ymax; dims > 2 reads
+    p0..p{D-1} into the nd names min0..max{D-1}."""
+    if dims == 2:
+        coords = [(x, "xmin"), (y, "ymin"), (x, "xmax"), (y, "ymax")]
+    else:
+        coords = [(f"p{d}", f"{mm}{d}") for mm in ("min", "max") for d in range(dims)]
+    return points_df.select(query_id, *[F.col(p).alias(c) for p, c in coords])
+
+
 def point_query(
     data_df: DataFrame,
     points_df: DataFrame,
@@ -521,9 +564,5 @@ def point_query(
 ) -> DataFrame:
     """Point probes = degenerate boxes (reference prtree.h:596-615,
     743-754): identical results to a zero-extent box query."""
-    q = points_df.select(
-        query_id,
-        F.col(x).alias("xmin"), F.col(y).alias("ymin"),
-        F.col(x).alias("xmax"), F.col(y).alias("ymax"),
-    )
+    q = _points_as_boxes(points_df, query_id, x=x, y=y)
     return batch_query(data_df, q, cfg, data_id, query_id)

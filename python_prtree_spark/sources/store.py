@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from python_prtree_spark.config import DEFAULT_CONFIG, EngineConfig, Extent
 from python_prtree_spark.operators.build import build_index
+from python_prtree_spark.operators.probe import _carried_cols, _ov_ref_sql, _points_as_boxes
 
 __all__ = [
     "save_index", "load_index", "LoadedIndex", "N_BUCKETS", "merge_refresh",
@@ -437,11 +438,6 @@ def merge_refresh(
     _commit_snapshot(index_dir, files, "refresh", cur)
 
 
-def _extra_box_cols(dims: int) -> list[str]:
-    """Carried coordinate columns for dims > 2 (nd naming, nd.py)."""
-    return [f"{mm}{d}" for d in range(2, dims) for mm in ("min", "max")]
-
-
 def save_index(
     data_df: DataFrame,
     path: str,
@@ -472,8 +468,8 @@ def save_index(
         from python_prtree_spark.operators.nd import _as2d, box_cols
 
         validate_boxes_df(data_df.select(data_id, *box_cols(dims)), cfg, dims)
-        data_df = _as2d(data_df, data_id, dims, keep_extra=True)
-        extra_cols = _extra_box_cols(dims)
+        data_df = _as2d(data_df, data_id, dims)
+        extra_cols = _carried_cols(dims)
 
     spark = data_df.sparkSession
     snap_cur = current_snapshot_version(os.path.join(path, "index"))
@@ -634,7 +630,7 @@ class LoadedIndex:
 
         For an nd index (dims > 2) the reconstructed table uses the nd
         column convention (min0..min{D-1}, max0..max{D-1})."""
-        extras = _extra_box_cols(self.dims)
+        extras = _carried_cols(self.dims)
         zipped = F.arrays_zip(
             "ids", "b_xmin", "b_ymin", "b_xmax", "b_ymax",
             *[f"b_{c}" for c in extras],
@@ -676,7 +672,7 @@ class LoadedIndex:
         closed-interval overlap in-kernel — full-dimensional pairs, same
         single pack-pair shuffle."""
         extent, level = self.cfg.extent, self.cfg.level
-        extras = [f"b_{c}" for c in _extra_box_cols(self.dims)]
+        extras = [f"b_{c}" for c in _carried_cols(self.dims)]
         idx = self.df.select(
             "cell", "salt", "ids", "b_xmin", "b_ymin", "b_xmax", "b_ymax",
             "leaf_mbbs", "leaf_size", *extras,
@@ -924,18 +920,7 @@ class LoadedIndex:
         x/y name the probe coordinate columns, mirroring knn_join and
         distance_join. On an nd index (dims > 2) pass columns p0..p{D-1}
         instead — the same convention as PRTreeTable.point_query."""
-        if self.dims > 2:
-            pts = points_df.select(
-                query_id,
-                *[F.col(f"p{d}").alias(f"min{d}") for d in range(self.dims)],
-                *[F.col(f"p{d}").alias(f"max{d}") for d in range(self.dims)],
-            )
-        else:
-            pts = points_df.select(
-                query_id,
-                F.col(x).alias("xmin"), F.col(y).alias("ymin"),
-                F.col(x).alias("xmax"), F.col(y).alias("ymax"),
-            )
+        pts = _points_as_boxes(points_df, query_id, self.dims, x, y)
         return self.batch_query(pts, query_id, data_id)
 
     def batch_query(
@@ -963,16 +948,15 @@ class LoadedIndex:
         radius loop scores candidates without any join back to a base
         table."""
         from python_prtree_spark.functions.tiling import explode_cells
-        from python_prtree_spark.operators.probe import _ov_ref_sql
 
         cfg = self.cfg
-        extras = _extra_box_cols(self.dims)
+        extras = _carried_cols(self.dims)
         if extras:
             # nd index: probes arrive in the nd convention — route on dims
             # 0-1, carry dims 2..D-1 for the refine
             from python_prtree_spark.operators.nd import _as2d
 
-            query_df = _as2d(query_df, query_id, self.dims, keep_extra=True)
+            query_df = _as2d(query_df, query_id, self.dims)
         box = ["xmin", "ymin", "xmax", "ymax", *extras]
         q = explode_cells(
             query_df.select(query_id, *box), cfg.extent, cfg.level,
@@ -1003,11 +987,7 @@ class LoadedIndex:
             "l_xmin <= q_xmax AND q_xmin <= l_xmax AND "
             "l_ymin <= q_ymax AND q_ymin <= l_ymax"
         )
-        refine = " AND ".join(
-            [_ov_ref_sql(cfg, "q", "d")]
-            + [f"d_min{d} <= q_max{d} AND q_min{d} <= d_max{d}"
-               for d in range(2, self.dims)]
-        )
+        refine = _ov_ref_sql(cfg, "q", "d", extras)
         out = [f"_qid AS `{query_id}`", f"d_id AS `{data_id}`"]
         if with_centroids:
             out += ["(d_xmin + d_xmax) / 2 AS _cx", "(d_ymin + d_ymax) / 2 AS _cy"]

@@ -54,6 +54,30 @@ def test_batch_query_nd_oracle(spark, dims, strategy):
     assert got == oracle_nd(q, d, dims)
 
 
+def test_nd_auto_tiny_routes_without_jobs(spark, tmp_path):
+    """With extent and level set, strategy 'auto' and no n_data_hint, a
+    tiny 3D data side takes the same zero-job shortcut as 2D: building
+    the batch_query_nd frame schedules no Spark job (no resolve_geometry
+    count), and its pairs still equal the brute-force oracle."""
+    d = rand_boxes_nd(300, 3, 121)
+    q = rand_boxes_nd(30, 3, 122)
+    nd_df(spark, d, 3).write.parquet(str(tmp_path / "d"))
+    nd_df(spark, q, 3, "qid").write.parquet(str(tmp_path / "q"))
+    # a file source gives Catalyst a size estimate (in-memory frames have none)
+    ddf = spark.read.parquet(str(tmp_path / "d"))
+    qdf = spark.read.parquet(str(tmp_path / "q"))
+    sc = spark.sparkContext
+    sc.setJobGroup("nd-tiny-route", "batch_query_nd frame build")
+    try:
+        out = batch_query_nd(ddf, qdf, 3, CFG.with_(strategy="auto"))
+        jobs = sc.statusTracker().getJobIdsForGroup("nd-tiny-route")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert {(r["qid"], r["id"]) for r in out.collect()} == oracle_nd(q, d, 3)
+
+
 @pytest.mark.parametrize("strategy", ["sql", "packed"])
 def test_intersections_3d(spark, strategy):
     d = rand_boxes_nd(500, 3, 77, ext_max=10.0)

@@ -34,6 +34,17 @@ def test_payload_roundtrip_and_return_obj(spark):
     got = {r["id"]: (r["caption"], r["blob"]) for r in t2.get_obj([3, 77]).collect()}
     assert got[3] == ("cap3", bytes([3]) * 4)
     assert got[77] == (None, None)
+    # ids above 2^33, a missing id (NULL payload) and a duplicate id: one
+    # row per requested id
+    big = 2**33 + 5
+    t2b = t2.insert(idx=big, bb=[1.0, 1.0, 2.0, 2.0],
+                    obj={"caption": "big", "blob": b"xy"})
+    rows = t2b.get_obj([big, 2**34 + 1, 3, 3]).collect()
+    assert sorted(r["id"] for r in rows) == [3, 3, big, 2**34 + 1]
+    got = {r["id"]: (r["caption"], r["blob"]) for r in rows}
+    assert got[big] == ("big", b"xy")
+    assert got[2**34 + 1] == (None, None)
+    assert got[3] == ("cap3", bytes([3]) * 4)
 
     # overwrite semantics
     upd2 = spark.createDataFrame(

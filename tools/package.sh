@@ -15,6 +15,6 @@ spark-submit --master yarn --deploy-mode cluster \
   --conf spark.sql.shuffle.partitions=$((N * 8)) \
   --py-files build/python_prtree_spark.zip \
   bench.py
-# rerun with --num-executors $((N * 4)) for the 4N point; this sandbox
-# stands in with local[8] vs local[32] (bench/scaling.py).
+# rerun with --num-executors $((N * 4)) for the 4N point; the closed
+# local-cluster scaling evidence is in BENCH.md (bench/scaling_attempts.jsonl).
 EOF

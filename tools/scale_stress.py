@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -67,6 +68,26 @@ def join_boxes(spark, n: int, id_col: str, c1, c2, c3, c4, ext_scale: int,
     )
 
 
+# Upper bound on the bytes one shuffled or checkpointed box row leaves on
+# disk (id, cell, salt, side and four doubles, after the cell explode)
+_ROW_BYTES = 128
+
+
+def shm_local_dir(build_n: int, join_n: int) -> str | None:
+    """/dev/shm/spark-local when /dev/shm is writable and its free space
+    covers the run's worst-case spill — every build and join sample's
+    shuffle files plus the checkpointed inputs at once — else None, which
+    leaves Spark's scratch space on disk. A tmpfs that fills mid-run kills
+    the run (and shares memory with everything else on the host)."""
+    rows = sum(n * (1 + 3) for n in (8_000_000, build_n))  # input + 3 samples
+    rows += (join_n + join_n * 3 // 8) * (1 + 2)  # inputs + 2 join samples
+    if not os.access("/dev/shm", os.W_OK):
+        return None
+    if shutil.disk_usage("/dev/shm").free < rows * _ROW_BYTES:
+        return None
+    return "/dev/shm/spark-local"
+
+
 def main():
     build_n = int(sys.argv[1]) if len(sys.argv) > 1 else 32_000_000
     join_n = int(sys.argv[2]) if len(sys.argv) > 2 else 32_000_000
@@ -81,8 +102,9 @@ def main():
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
     )
-    if os.access("/dev/shm", os.W_OK):
-        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
+    local_dir = shm_local_dir(build_n, join_n)
+    if local_dir is not None:
+        builder = builder.config("spark.local.dir", local_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"cpus": int(cpus), "shuffle_partitions": shuffle_parts}
